@@ -182,13 +182,30 @@ def search(
         else:
             idf = idf.select("word", "idf")
 
-    params = index.scoring_params.select("avgdl")
+    return top_k(term_scores(index, tf, idf, k1=k1, b=b), k)
 
-    scored = (
+
+def term_scores(
+    index: InvertedIndex,
+    tf: DataFrame,
+    idf: DataFrame,
+    *,
+    k1: float = K1_DEFAULT,
+    b: float = B_DEFAULT,
+) -> DataFrame:
+    """(word, doc_id, term_score): each posting's BM25 contribution.
+
+    ``tf`` is (a filter of) the index's term_frequencies and ``idf``
+    a (word, idf) frame; |d| and avgdl come from the index. With the
+    unfiltered tables this is the per-term score table a long-lived
+    server caches once, so a query only sums its terms' rows."""
+    params = index.scoring_params.select("avgdl")
+    return (
         tf.join(F.broadcast(idf), "word")
         .join(index.doc_lengths, "doc_id")
         .crossJoin(F.broadcast(params))
         .select(
+            "word",
             "doc_id",
             bm25_term_score(
                 F.col("term_freq"),
@@ -200,8 +217,13 @@ def search(
             ).alias("term_score"),
         )
     )
+
+
+def top_k(scores: DataFrame, k: int) -> DataFrame:
+    """Sum (doc_id, term_score) rows per doc -> top-k (doc_id,
+    total_score), score desc, ties by doc_id asc."""
     return (
-        scored.groupBy("doc_id")
+        scores.groupBy("doc_id")
         .agg(F.sum("term_score").alias("total_score"))
         .orderBy(F.desc("total_score"), F.asc("doc_id"))
         .limit(k)
@@ -334,11 +356,20 @@ def snippets(
     cases) are collapsed to the first by min(text) — same
     "take first match" semantics as pyapp.py:114.
     """
-    txt = doc_text.groupBy("doc_id").agg(F.min(text_col).alias("_t"))
-    return (
-        results.join(txt, "doc_id", "left")
-        .withColumn("snippet", F.substring("_t", 1, max_len))
-        .drop("_t")
+    return results.join(
+        snippet_table(doc_text, text_col=text_col, max_len=max_len),
+        "doc_id",
+        "left",
+    )
+
+
+def snippet_table(
+    doc_text: DataFrame, *, text_col: str = "text", max_len: int = 300
+) -> DataFrame:
+    """(doc_id, snippet): the first ``max_len`` characters of each
+    doc's text, duplicate doc_ids collapsed by min(text)."""
+    return doc_text.groupBy("doc_id").agg(
+        F.substring(F.min(text_col), 1, max_len).alias("snippet")
     )
 
 

@@ -104,36 +104,49 @@ def search_with_correction(
 ):
     """BM25 search with spell-correction fallback: query terms absent
     from the vocabulary are replaced by their best suggestion
-    (min edit distance, then max doc_freq). One small vocabulary scan
-    per unknown term — acceptable because queries are tiny and the
-    vocabulary table is broadcast-sized.
+    (min edit distance, then max doc_freq); see :func:`correct_terms`.
 
     Returns (results DataFrame, corrections dict).
     """
     from searchengine_spark.index.bm25 import search
     from searchengine_spark.text.tokenizer import tokenize_query
 
-    terms = tokenize_query(query, stem=stem)
-    vocab = index.idf_values.select("word", "doc_freq")
+    terms, corrections = correct_terms(
+        index.idf_values.select("word", "doc_freq"),
+        tokenize_query(query, stem=stem),
+        max_distance=max_distance,
+    )
+    return search(index, terms, k=k), corrections
+
+
+def correct_terms(
+    vocabulary: DataFrame, terms: list[str], *, max_distance: int = 2
+) -> tuple[list[str], dict[str, str | None]]:
+    """Replace each term missing from ``vocabulary`` (word, doc_freq)
+    by its best suggestion -> (terms to search, corrections). One
+    small vocabulary scan per unknown term — acceptable because
+    queries are tiny and the vocabulary table is broadcast-sized.
+
+    A term with no suggestion within ``max_distance`` is dropped and
+    recorded as None, so callers can surface that part of the query
+    was ignored rather than silently vanished."""
     known = {
         r.word
-        for r in vocab.filter(F.col("word").isin(terms)).select("word").collect()
+        for r in vocabulary.filter(F.col("word").isin(terms)).select("word").collect()
     }
-    corrections: dict[str, str] = {}
+    corrections: dict[str, str | None] = {}
     final_terms = []
     for t in terms:
         if t in known:
             final_terms.append(t)
             continue
-        best = suggest_terms(vocab, t, max_distance=max_distance, k=1).collect()
+        best = suggest_terms(vocabulary, t, max_distance=max_distance, k=1).collect()
         if best:
             corrections[t] = best[0].word
             final_terms.append(best[0].word)
         else:
-            # Record dropped terms (None) so callers can surface that
-            # part of the query was ignored, not silently vanished.
             corrections[t] = None
-    return search(index, final_terms, k=k), corrections
+    return final_terms, corrections
 
 
 # --------------------------------------------------------------- queries

@@ -6,15 +6,22 @@ top-10 results with truncated document text
 (/root/reference/pyapp.py:82-121; devcontainer runs
 `streamlit run pyapp.py`). This module is that user experience on the
 Spark engine without the Streamlit dependency: build + cache the
-index ONCE at startup (the reference's offline-build /
+serving tables ONCE (the reference's offline-build /
 interactive-query architecture), then answer queries from the warm
 cache — as a stdlib-only HTTP JSON endpoint and/or a terminal REPL.
 
-Serving path per query: tokenize driver-side (tiny), prune the tf
-scan with an IN-list filter, 3-way join + broadcast params, top-k via
-TakeOrderedAndProject, ONE snippet join (not the reference's N+1
-per-hit collect loop — pyapp.py:110-114), literal highlight. All
-reused from index/bm25.py; nothing here adds plan surface.
+Everything that does not depend on the query is computed once and
+cached: each posting's BM25 contribution (term scores, from
+bm25.term_scores — the one BM25 formula) and each doc's snippet.
+Serving path per query: tokenize driver-side (tiny), filter the
+cached term scores to the query terms, sum per doc and take the
+top-k (bm25.top_k; one Spark job, no shuffle — the table is
+partitioned on doc_id), then look the ≤k hit ids up in the cached
+snippet table and highlight them (one more job; not the reference's
+N+1 per-hit collect loop — pyapp.py:110-114). No request scans the
+documents or joins idf, |d| or avgdl. Measured with perfbench
+(search_http, 10k docs, 4-CPU VM): ~2.3 Spark jobs, no shuffle and a
+median of ~0.27 s per warm request from one client.
 
 Usage:
     python -m searchengine_spark.serve --sf-dir /root/testdata/sf0.01 --port 8765
@@ -46,17 +53,13 @@ class SearchService:
         snippet_len: int = 200,
         multilingual: bool = False,
     ) -> None:
+        from searchengine_spark.index.bm25 import snippet_table, term_scores
         from searchengine_spark.index.builder import build_index
         from searchengine_spark.io import load_table
 
-        self._spark = spark
         self._stem = stem
-        self._snippet_len = snippet_len
         self._multilingual = multilingual
-        self._docs = load_table(spark, sf_dir, "documents")
-        # Serving cache at few partitions: interactive queries are
-        # task-scheduling-bound (see InvertedIndex.coalesce) — 2x
-        # lower per-query latency than the build-parallel layout.
+        docs = load_table(spark, sf_dir, "documents")
         if multilingual:
             if stem:
                 raise ValueError(
@@ -71,14 +74,32 @@ class SearchService:
 
             from searchengine_spark.text.multilingual import routed_frame
 
-            routed = routed_frame(self._docs).select("doc_id", "words")
-            self._index = (
-                build_index(routed, tokens=F.col("words"))
-                .coalesce(4)
-                .cache()
-            )
+            routed = routed_frame(docs).select("doc_id", "words")
+            index = build_index(routed, tokens=F.col("words"))
         else:
-            self._index = build_index(self._docs, stem=stem).coalesce(4).cache()
+            index = build_index(docs, stem=stem)
+        # The three tables a request reads, cached at few partitions:
+        # interactive queries are task-scheduling-bound (see
+        # InvertedIndex.coalesce). Nothing query-independent is left
+        # for a request to recompute — no idf / |d| / avgdl join, no
+        # scan of the documents.
+        #   term scores (word, doc_id, term_score): BM25 per posting,
+        #       hash-partitioned on doc_id, so a query's per-doc sum
+        #       needs no shuffle and its top-k is a single job
+        #   snippets    (doc_id, snippet)
+        #   vocabulary  (word, doc_freq): fuzzy correction only
+        idf = index.idf_values.select("word", "idf")
+        self._term_scores = (
+            term_scores(index, index.term_frequencies, idf)
+            .repartition(4, "doc_id")
+            .cache()
+        )
+        self._snippets = (
+            snippet_table(docs, max_len=snippet_len).coalesce(4).cache()
+        )
+        self._vocab = (
+            index.idf_values.select("word", "doc_freq").coalesce(4).cache()
+        )
         # embeddings power /similar; optional in custom datasets
         import os
 
@@ -89,10 +110,45 @@ class SearchService:
             self._emb = (
                 load_table(spark, sf_dir, "embeddings").coalesce(4).cache()
             )
-        # Materialize the cache before the first user query so first-hit
-        # latency is query cost, not index build (the reference pays its
-        # 1-2 min cold start inside the first Streamlit interaction).
-        self._index.scoring_params.collect()
+        # The one eager step: tokenize the corpus into build_index's
+        # token cache (scoring_params reads |d| off it). The tables
+        # above are built by the first request that reads them — tf,
+        # idf, the term scores and the snippets by the first /search,
+        # the vocabulary by the first fuzzy one — so those requests
+        # are seconds slower (measured cold on 10k docs, 4 CPUs: ~5-6
+        # s here, then ~5 s for the first /search and ~3 s for the
+        # first fuzzy one). Building them here would only move that
+        # cost into start-up.
+        index.scoring_params.collect()
+
+    def _top_k(self, terms: list[str], k: int):
+        """Top-k (doc_id, total_score) over the cached term scores."""
+        from pyspark.sql import functions as F
+
+        from searchengine_spark.index.bm25 import top_k
+
+        return top_k(self._term_scores.filter(F.col("word").isin(terms)), k)
+
+    def _with_snippets(self, hits, terms=None) -> list[tuple]:
+        """(doc_id, score, snippet) of each row of ``hits`` (doc_id,
+        score; at most MAX_K rows, in rank order), snippets optionally
+        highlighted. The snippet join is a lookup of the hit ids in
+        the cached snippet table: no shuffle, and nothing of the
+        table leaves the executors but the hits' own snippets."""
+        from pyspark.sql import functions as F
+
+        from searchengine_spark.index.bm25 import highlight
+
+        ranked = hits.collect()  # k rows, post-limit
+        if not ranked:
+            return []
+        snips = self._snippets.filter(
+            F.col("doc_id").isin([r[0] for r in ranked])
+        )
+        if terms:
+            snips = highlight(snips, "snippet", terms)
+        text = dict(snips.collect())
+        return [(r[0], r[1], text.get(r[0])) for r in ranked]
 
     def query(
         self, q: str, k: int = 10, *, fuzzy: bool = False
@@ -103,7 +159,7 @@ class SearchService:
         replaced by their closest in-vocabulary suggestion (distance
         then doc_freq) before scoring — typo tolerance the reference
         lacks (its unknown terms silently contribute nothing)."""
-        from searchengine_spark.index.bm25 import highlight, search, snippets
+        from searchengine_spark.text.tokenizer import tokenize_query
 
         highlight_terms = [q]
         if self._multilingual:
@@ -117,45 +173,28 @@ class SearchService:
             )
 
             terms = routed_query_terms(q)
-            hits = search(self._index, terms, k=k)
             # every routed term (CJK bigrams included) is a literal
             # substring of the original text, so highlight matches it
             highlight_terms = terms
-        elif fuzzy:
-            from searchengine_spark.index.phrase import search_with_correction
-            from searchengine_spark.text.tokenizer import tokenize_query
+        else:
+            terms = tokenize_query(q, stem=self._stem)
+        if fuzzy and terms:
+            from searchengine_spark.index.phrase import correct_terms
 
-            hits, corrections = search_with_correction(
-                self._index, q, k=k, stem=self._stem
-            )
+            terms, _ = correct_terms(self._vocab, terms)
             # Highlight the terms actually SEARCHED, each on its own:
             # a raw substring rewrite of q would miss case variants
             # ('Sparkk' vs the lowercased correction key) and corrupt
             # words that merely contain the typo as a substring.
-            highlight_terms = [
-                corrections.get(t, t)
-                for t in tokenize_query(q, stem=self._stem)
-                if corrections.get(t, t) is not None
-            ]
-        else:
-            hits = search(self._index, q, k=k, stem=self._stem)
-        rows = (
-            highlight(
-                snippets(hits, self._docs, max_len=self._snippet_len),
-                "snippet",
-                highlight_terms,
-            )
-            .collect()  # k rows, post-limit — the only driver collect
-        )
+            highlight_terms = terms
+        if not terms:
+            return []
         return [
-            {
-                "doc_id": r["doc_id"],
-                "total_score": round(float(r["total_score"]), 6),
-                "snippet": r["snippet"],
-            }
-            for r in rows
+            {"doc_id": d, "total_score": round(float(s), 6), "snippet": t}
+            for d, s, t in self._with_snippets(
+                self._top_k(terms, k), highlight_terms
+            )
         ]
-
 
     def similar(
         self, doc_id: int, q: str | None = None, k: int = 10
@@ -168,9 +207,9 @@ class SearchService:
         fusion contract is rank lists, so nothing else changes."""
         from pyspark.sql import functions as F
 
-        from searchengine_spark.index.bm25 import search, snippets
         from searchengine_spark.index.hybrid import FUSE_N, _ranked, rrf_fuse
         from searchengine_spark.operators.similarity import cosine_expr
+        from searchengine_spark.text.tokenizer import tokenize_query
 
         if self._emb is None:
             raise ValueError("no embeddings table in this dataset")
@@ -190,32 +229,21 @@ class SearchService:
             )
         )
         lists = [_ranked(sem_scores, "cosine", "doc_id", FUSE_N)]
-        if q:
+        # A query with no index terms fuses an empty list: it adds
+        # nothing to any doc's RRF score, so it is left out.
+        terms = tokenize_query(q, stem=self._stem) if q else []
+        if terms:
             lists.append(
-                _ranked(
-                    search(self._index, q, k=FUSE_N, stem=self._stem),
-                    "total_score",
-                    "doc_id",
-                    FUSE_N,
-                )
+                _ranked(self._top_k(terms, FUSE_N), "total_score", "doc_id", FUSE_N)
             )
         fused = (
             rrf_fuse(lists)
             .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
             .limit(k)
         )
-        rows = snippets(
-            fused.withColumn("total_score", F.col("rrf_score")),
-            self._docs,
-            max_len=self._snippet_len,
-        ).collect()
         return [
-            {
-                "doc_id": r["doc_id"],
-                "rrf_score": round(float(r["total_score"]), 6),
-                "snippet": r["snippet"],
-            }
-            for r in rows
+            {"doc_id": d, "rrf_score": round(float(s), 6), "snippet": t}
+            for d, s, t in self._with_snippets(fused)
         ]
 
 

@@ -3,11 +3,23 @@ highlighted snippet comes back — the reference's end-to-end user
 experience (pyapp.py input -> results -> text) on the Spark engine."""
 
 import json
-import sys
 import threading
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+import pytest
+
+# The serving path is the paper's user path (tokenize -> BM25 top-k ->
+# snippet); the smoke tier covers it.
+pytestmark = pytest.mark.smoke
+
+PARITY_QUERIES = ["spark join window", "data", "hash merge fast", "Spark, JOIN!"]
+
+
+@pytest.fixture(scope="module")
+def service(spark, sf_dir):
+    from searchengine_spark.serve import SearchService
+
+    return SearchService(spark, sf_dir)
 
 
 def _get(port, path):
@@ -20,10 +32,9 @@ def _get(port, path):
         return e.code, json.loads(e.read())
 
 
-def test_http_serving_loop_end_to_end(spark, sf_dir):
-    from searchengine_spark.serve import SearchService, make_http_server
+def test_http_serving_loop_end_to_end(service):
+    from searchengine_spark.serve import make_http_server
 
-    service = SearchService(spark, sf_dir)
     server = make_http_server(service, port=0)
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
@@ -55,18 +66,14 @@ def test_http_serving_loop_end_to_end(spark, sf_dir):
         server.server_close()
 
 
-def test_service_query_empty_and_unknown_terms(spark, sf_dir):
-    from searchengine_spark.serve import SearchService
-
-    service = SearchService(spark, sf_dir)
+def test_service_query_empty_and_unknown_terms(service):
     assert service.query("the a") == []  # stopword-only
     assert service.query("zzzzunknown") == []  # out-of-vocab
 
 
-def test_fuzzy_param_corrects_typos(spark, sf_dir):
-    from searchengine_spark.serve import SearchService, make_http_server
+def test_fuzzy_param_corrects_typos(service):
+    from searchengine_spark.serve import make_http_server
 
-    service = SearchService(spark, sf_dir)
     server = make_http_server(service, port=0)
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
@@ -87,10 +94,9 @@ def test_fuzzy_param_corrects_typos(spark, sf_dir):
         server.server_close()
 
 
-def test_similar_endpoint_hybrid_more_like_this(spark, sf_dir):
-    from searchengine_spark.serve import SearchService, make_http_server
+def test_similar_endpoint_hybrid_more_like_this(service):
+    from searchengine_spark.serve import make_http_server
 
-    service = SearchService(spark, sf_dir)
     server = make_http_server(service, port=0)
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
@@ -143,3 +149,98 @@ def test_multilingual_service_routed_queries(spark, sf_dir):
         svc.query("data", fuzzy=True)
     with _pytest.raises(ValueError):
         SearchService(spark, sf_dir, multilingual=True, stem=True)
+
+
+def _ranked(pairs):
+    """(doc_id, score rounded to 6) by score desc, then doc_id: two
+    plans that sum a doc's term scores in different orders may differ
+    in the last bit, which must not reorder docs tied at 6 places."""
+    return sorted(((d, round(s, 6)) for d, s in pairs), key=lambda h: (-h[1], h[0]))
+
+
+def _served(hits):
+    return _ranked((h["doc_id"], h["total_score"]) for h in hits)
+
+
+def test_service_ranking_matches_bm25_search(spark, sf_dir, service):
+    """The service ranks from its cached per-term score table; its
+    hits must be bm25.search's over the same index — plain, stemmed
+    and spell-corrected — with the same scores, ties broken by
+    doc_id."""
+    from searchengine_spark.index.bm25 import search
+    from searchengine_spark.index.builder import build_index
+    from searchengine_spark.index.phrase import search_with_correction
+    from searchengine_spark.io import load_table
+    from searchengine_spark.serve import SearchService
+
+    docs = load_table(spark, sf_dir, "documents")
+    idx = build_index(docs).cache()
+    for q in PARITY_QUERIES:
+        want = _ranked(search(idx, q, k=10).collect())
+        assert want and _served(service.query(q, k=10)) == want, q
+    for q in ("sparkk joinn", "wndow"):
+        res, corrections = search_with_correction(idx, q, k=10)
+        want = _ranked(res.collect())
+        assert corrections and want, q
+        assert _served(service.query(q, k=10, fuzzy=True)) == want, q
+
+    stemmed = SearchService(spark, sf_dir, stem=True)
+    sidx = build_index(docs, stem=True).cache()
+    for q in ("joins windows", "merged hashing"):
+        want = _ranked(search(sidx, q, k=10, stem=True).collect())
+        assert want and _served(stemmed.query(q, k=10)) == want, q
+    for q in ("the a", "zzzzunknown"):
+        assert service.query(q) == [] and stemmed.query(q) == [], q
+    assert service.query("the a", fuzzy=True) == []
+
+
+def _plan_leaves(plan) -> list[str]:
+    """Leaf operators of an executed plan, looking through adaptive
+    and query-stage wrappers but not into a cached relation's own
+    (build-time) plan."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_leaves(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _plan_leaves(plan.plan())
+    kids = plan.children()
+    if kids.size() == 0:
+        return [plan.simpleString(25)]
+    return [leaf for i in range(kids.size()) for leaf in _plan_leaves(kids.apply(i))]
+
+
+# Spark jobs a warm non-fuzzy /search runs on the fixture: the top-k
+# over the doc_id-partitioned term scores, and the snippet lookup.
+WARM_QUERY_JOBS = 2
+
+
+def test_warm_query_reads_only_cached_tables(spark, service, monkeypatch):
+    """A warm request neither scans files (the documents table, the
+    index sources) nor launches more jobs than the cached serving
+    plan needs."""
+    sc = spark.sparkContext
+    collected = []
+    cls = type(spark.range(1))
+    collect = cls.collect
+
+    def recording_collect(df):
+        collected.append(df)
+        return collect(df)
+
+    service.query("spark join window", k=10)  # warm: builds the caches
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    sc.setJobGroup("serve-warm-query", "warm /search request")
+    try:
+        hits = service.query("spark join window", k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert hits
+    jobs = sc.statusTracker().getJobIdsForGroup("serve-warm-query")
+    assert 0 < len(jobs) <= WARM_QUERY_JOBS, jobs
+    leaves = [
+        leaf
+        for df in collected
+        for leaf in _plan_leaves(df._jdf.queryExecution().executedPlan())
+    ]
+    # every leaf a cached-table scan: no FileScan of documents or index
+    assert leaves and all(leaf.startswith("InMemoryTableScan") for leaf in leaves), leaves
