@@ -821,30 +821,83 @@ def _explicit_round() -> int | None:
         return None
 
 
+_DETAIL_RE = re.compile(r"BENCH_DETAIL_r(\d+)(_driver)?\.json$")
+
+
+def detail_files(root: str, below: int | None = None) -> dict[int, str]:
+    """round -> BENCH_DETAIL_r{N}.json path under ``root`` (rounds
+    below ``below`` only, when given). A round can carry two detail
+    files: the in-round run (BENCH_DETAIL_rNN.json) and the driver's
+    post-round run (BENCH_DETAIL_rNN_driver.json — round 7's landed
+    mis-stamped as r08 and was renamed to its true round). The
+    _driver variant wins: the driver harness is what the NEXT round's
+    driver numbers compare against. The one resolver shared by this
+    harness, tests/test_bench_budget.py and scripts/bench_compare.py."""
+    import glob
+
+    files: dict[int, str] = {}
+    for p in sorted(glob.glob(os.path.join(root, "BENCH_DETAIL_r*.json"))):
+        m = _DETAIL_RE.search(p)
+        if (
+            m
+            and (below is None or int(m.group(1)) < below)
+            and (m.group(2) or int(m.group(1)) not in files)
+        ):
+            files[int(m.group(1))] = p
+    return files
+
+
+def _calib_one(doc: dict, prefix: str) -> float | None:
+    vals = [doc.get(f"{prefix}start_sec"), doc.get(f"{prefix}end_sec")]
+    vals = [v for v in vals if isinstance(v, (int, float)) and v > 0]
+    return sum(vals) / len(vals) if vals else None
+
+
+def pair_calib(old: dict, new: dict) -> tuple[float, float, str]:
+    """Calibration pair for two detail files. Prefers the Spark-side
+    shuffle probe (spark_calib_*, round 10+): the pure-scan probe
+    tracks raw CPU but missed a uniform 1.6x Spark-throughput swing in
+    round 9 (it claimed the host was FASTER while every untouched
+    query ran slower). Falls back to the scan probe — consistently for
+    BOTH files — when either side predates the shuffle probe."""
+    for prefix, label in (("spark_calib_", "spark"), ("calib_", "scan")):
+        a, b = _calib_one(old, prefix), _calib_one(new, prefix)
+        if a is not None and b is not None:
+            return a, b, label
+    return 1.0, 1.0, "none"
+
+
+def _here() -> str:
+    return os.path.dirname(os.path.abspath(__file__))
+
+
+def _inferred_round() -> int:
+    """1 + the highest round among CORRECTNESS_r*/BENCH_r* files next
+    to this script."""
+    import glob
+
+    rounds = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(_here(), "*_r*.json"))
+        if (m := re.search(r"(?:CORRECTNESS|BENCH)_r(\d+)\.json$", p))
+    ]
+    return max(rounds, default=0) + 1
+
+
+def _prior_details() -> dict[int, str]:
+    """Detail files of the rounds strictly below this run's (explicit
+    --round / SPARK_GRAFT_BENCH_ROUND, else the inferred round)."""
+    n = _explicit_round()
+    return detail_files(_here(), below=_inferred_round() if n is None else n)
+
+
 def _profile_mins(sf: float, n_files: int = 3) -> dict[str, float]:
     """Per-query MIN time across the last ``n_files`` bench details at
     the same sf (any round below this run's). Minima across runs are
     robust to one-run stalls; used to tighten the in-run re-time
     budgets (r14, verdict item 7). Raw seconds, not host-normalized —
     the caller's median host factor handles that."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    n = _explicit_round()
-    if n is None:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "*_r*.json"))
-            if (m := re.search(r"(?:CORRECTNESS|BENCH)_r(\d+)\.json$", p))
-        ]
-        n = max(rounds, default=0) + 1
-    files: dict[int, str] = {}
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)(_driver)?\.json$", p)
-        if m and int(m.group(1)) < n and (
-            m.group(2) or int(m.group(1)) not in files
-        ):
-            files[int(m.group(1))] = p
+    files = _prior_details()
     mins: dict[str, float] = {}
     for r in sorted(files)[-n_files:]:
         try:
@@ -863,27 +916,8 @@ def _profile_mins(sf: float, n_files: int = 3) -> dict[str, float]:
 def _budget_baseline() -> dict | None:
     """The BENCH_DETAIL document tests/test_bench_budget.py will
     compare this run against: the highest-round detail file whose
-    round is strictly below this run's (explicit --round /
-    SPARK_GRAFT_BENCH_ROUND, else the same max+1 inference
-    _write_detail uses), preferring the _driver variant in a round."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    n = _explicit_round()
-    if n is None:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "*_r*.json"))
-            if (m := re.search(r"(?:CORRECTNESS|BENCH)_r(\d+)\.json$", p))
-        ]
-        n = max(rounds, default=0) + 1
-    files: dict[int, str] = {}
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)(_driver)?\.json$", p)
-        if m and int(m.group(1)) < n and (
-            m.group(2) or int(m.group(1)) not in files
-        ):
-            files[int(m.group(1))] = p
+    round is strictly below this run's."""
+    files = _prior_details()
     if not files:
         return None
     try:
@@ -897,26 +931,18 @@ def _resolve_round() -> tuple[int, str, bool]:
     """(round_n, suffix, explicit) — the round this run stamps, shared
     by the detail writer and the rotation slot so both agree. N comes
     from SPARK_GRAFT_BENCH_ROUND (or a --round argv flag) when set.
-    Fallback: N = 1 + the highest round among CORRECTNESS_r*/BENCH_r*
-    files on disk, re-stamped to (N-1, "_driver") when the previous
-    round's CORRECTNESS snapshot is fresh (the driver runs bench
-    minutes AFTER writing it — this mis-stamped rounds 7, 8, 9 before
-    the freshness check)."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
+    Fallback: N = the inferred round (1 + the highest round among
+    CORRECTNESS_r*/BENCH_r* files on disk), re-stamped to
+    (N-1, "_driver") when the previous round's CORRECTNESS snapshot
+    is fresh (the driver runs bench minutes AFTER writing it — this
+    mis-stamped rounds 7, 8, 9 before the freshness check)."""
     n = _explicit_round()
     if n is not None:
         return n, "", True
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "*_r*.json"))
-        if (m := re.search(r"(?:CORRECTNESS|BENCH)_r(\d+)\.json$", p))
-    ]
-    n = max(rounds, default=0) + 1
+    n = _inferred_round()
     suffix = ""
     recent = float(os.environ.get("SPARK_GRAFT_BENCH_SNAPSHOT_WINDOW", "1800"))
-    prev_snap = os.path.join(here, f"CORRECTNESS_r{n - 1:02d}.json")
+    prev_snap = os.path.join(_here(), f"CORRECTNESS_r{n - 1:02d}.json")
     try:
         snap_age = time.time() - os.path.getmtime(prev_snap)
     except OSError:
@@ -945,12 +971,11 @@ def _write_detail(out: dict, round_info: tuple[int, str, bool] | None = None) ->
     cannot disagree); re-runs within a round overwrite idempotently.
     Compare rounds with scripts/bench_compare.py.
     """
-    here = os.path.dirname(os.path.abspath(__file__))
     n, suffix, explicit_flag = (
         round_info if round_info is not None else _resolve_round()
     )
     explicit = explicit_flag or None
-    path = os.path.join(here, f"BENCH_DETAIL_r{n:02d}{suffix}.json")
+    path = os.path.join(_here(), f"BENCH_DETAIL_r{n:02d}{suffix}.json")
     if explicit is None and os.path.exists(path):
         # The inference mis-stamps exactly once per round if bench runs
         # AFTER the driver's CORRECTNESS/BENCH snapshot (round 7's

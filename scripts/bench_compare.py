@@ -20,25 +20,19 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import detail_files, pair_calib  # noqa: E402
+
+
 def _latest_two(repo_root: str) -> tuple[str, str]:
-    # A round can carry two detail files: the in-round run
-    # (BENCH_DETAIL_rNN.json) and the driver's post-round run
-    # (BENCH_DETAIL_rNN_driver.json — round 7's landed mis-stamped as
-    # r08 and was renamed to its true round). Prefer the _driver
-    # variant when both exist: the driver harness is what the NEXT
-    # round's driver numbers compare against.
-    files = {}
-    for p in sorted(glob.glob(os.path.join(repo_root, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)(_driver)?\.json$", p)
-        if m and (m.group(2) or int(m.group(1)) not in files):
-            files[int(m.group(1))] = p
+    files = detail_files(repo_root)
     if len(files) < 2:
         sys.exit(
             "need two BENCH_DETAIL_r*.json files to compare "
@@ -48,37 +42,16 @@ def _latest_two(repo_root: str) -> tuple[str, str]:
     return files[hi[0]], files[hi[1]]
 
 
-def _calib_one(doc: dict, prefix: str) -> float | None:
-    vals = [doc.get(f"{prefix}start_sec"), doc.get(f"{prefix}end_sec")]
-    vals = [v for v in vals if isinstance(v, (int, float)) and v > 0]
-    return sum(vals) / len(vals) if vals else None
-
-
-def pair_calib(old: dict, new: dict) -> tuple[float, float, str]:
-    """Calibration pair for two detail files. Prefers the Spark-side
-    shuffle probe (spark_calib_*, round 10+): the pure-scan probe
-    tracks raw CPU but missed a uniform 1.6x Spark-throughput swing in
-    round 9 (it claimed the host was FASTER while every untouched
-    query ran slower). Falls back to the scan probe — consistently for
-    BOTH files — when either side predates the shuffle probe."""
-    for prefix, label in (("spark_calib_", "spark"), ("calib_", "scan")):
-        a, b = _calib_one(old, prefix), _calib_one(new, prefix)
-        if a is not None and b is not None:
-            return a, b, label
-    return 1.0, 1.0, "none"
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("paths", nargs="*", help="OLD.json NEW.json (default: two latest)")
     ap.add_argument("--threshold", type=float, default=1.5)
     args = ap.parse_args()
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if len(args.paths) == 2:
         old_path, new_path = args.paths
     elif not args.paths:
-        old_path, new_path = _latest_two(repo_root)
+        old_path, new_path = _latest_two(REPO)
     else:
         ap.error("give zero or two paths")
 

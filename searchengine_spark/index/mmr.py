@@ -91,13 +91,13 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-plan unroll works but nests M_SELECT re-evaluations of the
     candidate lineage — strictly worse at any scale for a K-bounded
     problem."""
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
     # Lineage-cut the MMR_K-row candidate frame: without it the
     # similarity join re-executes the whole BM25 scoring subtree a
     # second time (collect() caches nothing) — one scoring pass
     # instead of two per query (r13 optimization, guide §1.2 step 1).
-    cand_df = _cut_lineage(
+    cand_df = cut_lineage(
         q_bm25_scores(spark, sf_dir)
         .orderBy(F.desc("total_score"), F.asc("doc_id"))
         .limit(MMR_K)

@@ -250,16 +250,14 @@ def batch_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk-retrieval recall audit's doc-level side previously ran the
     identical search_many twice per bench sweep (r13 optimization,
     guide §1.2 step 1). The result is k rows per query — tiny — so
-    the lineage cut materializes ~30 rows."""
+    the session cache's lineage cut materializes ~30 rows."""
     from searchengine_spark.io import session_cached
 
     def build():
         from searchengine_spark.index.bm25 import search_many
-        from searchengine_spark.operators.dedup import _cut_lineage
 
-        idx = _index(spark, sf_dir)
-        return _cut_lineage(
-            search_many(idx, dict(BATCH_QUERIES), k=BM25_K, round_scores=6)
+        return search_many(
+            _index(spark, sf_dir), dict(BATCH_QUERIES), k=BM25_K, round_scores=6
         )
 
     return session_cached(spark, "bm25_batch_top", sf_dir, build)

@@ -1,9 +1,20 @@
-"""Table loading helpers.
+"""Table loading and the package's one materialization policy.
 
-All inputs are parquet directories/files named `<table>.parquet`
-under a scale-factor dir (see TESTDATA.md). Reads are plain
-`spark.read.parquet` so Catalyst gets full pushdown/pruning; no
-schema is imposed (parquet carries it).
+Loading: all inputs are parquet directories/files named
+`<table>.parquet` under a scale-factor dir (see TESTDATA.md). Reads
+are plain `spark.read.parquet` so Catalyst gets full
+pushdown/pruning; no schema is imposed (parquet carries it).
+
+Materialization, one rule per situation:
+- a stage that queries share is built through :func:`session_cached`,
+  which alone decides how it is stored: every DataFrame it returns
+  (alone or in a tuple) is lineage-cut once, and a frame that is
+  already cut is kept as it is;
+- iterative loops, and operators that persist scratch frames, call
+  :func:`cut_lineage` or :func:`cut_and_release` themselves (a cut
+  per round, or a cut before the scratch frames are released);
+- :func:`materialize_barrier` separates projection stages that
+  CollapseProject would otherwise fuse.
 """
 
 from __future__ import annotations
@@ -125,23 +136,6 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     return df
 
 
-def exchange_barrier(df: DataFrame) -> DataFrame:
-    """Materialization barrier between projection stages.
-
-    CollapseProject re-inlines an aliased expression into every
-    reference site of the next projection — for chained text ops
-    (tokenize -> shingle/chunk/hash) that re-evaluates the expensive
-    upstream expression per element. An Exchange is a hard boundary:
-    upstream computes once, downstream lambdas read materialized
-    arrays. The shuffled payload is token/int arrays (same order of
-    size as the input) — fine at interactive scale; for build-scale
-    runs use :func:`materialize_barrier` with a persist_dir, which
-    achieves the same boundary with a map-only parquet write + scan
-    instead of an all-to-all shuffle of the token stream.
-    """
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def default_persist_dir() -> str | None:
     """Build-scale opt-in: when $SPARK_GRAFT_PERSIST_DIR is set, the
     shingle/text family routes its stage barriers through persisted
@@ -155,7 +149,13 @@ _BARRIER_SEQ = __import__("itertools").count()
 def materialize_barrier(
     df: DataFrame, persist_dir: str | None = None, *, tag: str = "stage"
 ) -> DataFrame:
-    """Stage barrier with a scale-safe materialization strategy.
+    """Stage barrier between projection stages.
+
+    CollapseProject re-inlines an aliased expression into every
+    reference site of the next projection — for chained text ops
+    (tokenize -> shingle/chunk/hash) that re-evaluates the expensive
+    upstream expression per element. A barrier makes upstream compute
+    once, so downstream lambdas read materialized arrays.
 
     With ``persist_dir``: write the stage output to
     ``persist_dir/<tag>-<n>`` (map-only — each task writes its own
@@ -165,9 +165,12 @@ def materialize_barrier(
     the ``shingles=`` parameter of the dedup family) rather than
     relying on paths.
 
-    Without ``persist_dir``: fall back to :func:`exchange_barrier`
-    (in-memory shuffle barrier) — right for interactive/test scale
-    where writing a temp table per query would dominate.
+    Without ``persist_dir``, and for a streaming frame (which cannot
+    batch-write an intermediate; its micro-batches are batch-sized
+    anyway): an Exchange, ``repartition(defaultParallelism)``. The
+    shuffled payload is token/int arrays (same order of size as the
+    input) — right for interactive/test scale, where writing a temp
+    table per query would dominate.
 
     The ``<n>`` suffix is a session-unique counter: the returned
     frame is a LAZY scan, so two barrier calls sharing a path would
@@ -175,14 +178,8 @@ def materialize_barrier(
     pending reads (e.g. the incremental-dedup query banding the
     corpus and then the new batch).
     """
-    if df.isStreaming:
-        # A streaming frame cannot batch-write an intermediate; the
-        # Exchange barrier gives the same CollapseProject boundary
-        # inside each micro-batch (used by the streaming near-dup
-        # topology, whose micro-batches are batch-sized anyway).
-        return exchange_barrier(df)
-    if persist_dir is None:
-        return exchange_barrier(df)
+    if df.isStreaming or persist_dir is None:
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     path = os.path.join(persist_dir, f"{tag}-{next(_BARRIER_SEQ)}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
@@ -201,10 +198,11 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     """Eager lineage cut: localCheckpoint by default, a RELIABLE
     checkpoint under $SPARK_GRAFT_PERSIST_DIR when set (the
     cluster-grade opt-in — localCheckpoint blocks do not survive
-    executor loss; see operators/dedup._cut_lineage, which this
-    replaces as the shared implementation).
+    executor loss).
 
-    Beyond iterative loops, this is the r14 session-cache policy: a
+    Iterative loops cut once per round; without a cut each round
+    replays the whole upstream pipeline. :func:`session_cached` cuts
+    every shared stage it stores (the r14 policy): a
     `.cache()`d shared stage KEEPS its full analyzed plan, and every
     downstream persist/cache-lookup/AQE step re-canonicalizes that
     subtree — with the MinHash band pipeline (128 signature
@@ -242,10 +240,33 @@ _SESSION_CACHE: dict[tuple, object] = {}
 _SESSION_CACHE_MAX = 64
 
 
+def _is_cut(df: DataFrame) -> bool:
+    """True when ``df``'s analyzed plan is a LogicalRDD leaf — the root
+    both localCheckpoint and checkpoint produce. A filter or
+    projection over a cut frame is not itself cut."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LogicalRDD"
+
+
+def _shared_form(val):
+    """How a session-cached value is stored: a DataFrame lineage-cut
+    once (an already-cut frame as it is), a tuple element by element,
+    anything else (an InvertedIndex, counts, schemas, lists) as
+    built."""
+    if type(val) is tuple:
+        return tuple(_shared_form(v) for v in val)
+    if isinstance(val, DataFrame) and not _is_cut(val):
+        return cut_lineage(val)
+    return val
+
+
 def session_cached(spark: SparkSession, tag: str, sf_dir: str, build):
-    """Get-or-build a per-(session, dataset) memoized value (a cached
-    DataFrame lineage, typically). One shared implementation for the
-    index / shingle / signature caches.
+    """Get-or-build a per-(session, dataset) memoized value — the one
+    place a stage that queries share is materialized. DataFrames that
+    ``build()`` returns, alone or in a tuple, are stored lineage-cut
+    (see :func:`cut_lineage` for why a shared stage is cut, not
+    ``.cache()``d); a build therefore returns its frames lazy, and an
+    operator that already returns a cut frame is not cut twice.
 
     Key = (applicationId, id(session), tag, sf_dir):
     - applicationId separates restarted contexts (a stopped context's
@@ -264,6 +285,6 @@ def session_cached(spark: SparkSession, tag: str, sf_dir: str, build):
     if val is None:
         if len(_SESSION_CACHE) > _SESSION_CACHE_MAX:
             _SESSION_CACHE.clear()
-        val = build()
+        val = _shared_form(build())
         _SESSION_CACHE[key] = val
     return val

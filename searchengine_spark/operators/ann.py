@@ -524,19 +524,17 @@ def _session_hard_negatives(spark, sf_dir: str) -> DataFrame:
     consumed verbatim by emb_hard_negatives AND emb_training_triplets
     — each previously re-ran the bucket join + window (guide §1.2
     step 1)."""
-    from searchengine_spark.io import cut_lineage, load_table, session_cached
+    from searchengine_spark.io import load_table, session_cached
 
     return session_cached(
         spark,
         "ann-hard-negatives",
         sf_dir,
-        lambda: cut_lineage(
-            hard_negative_mine(
-                load_table(spark, sf_dir, "embeddings"),
-                dim=EMB_DIM,
-                k=HARD_NEG_K,
-                dup_threshold=NEARDUP_COS,
-            )
+        lambda: hard_negative_mine(
+            load_table(spark, sf_dir, "embeddings"),
+            dim=EMB_DIM,
+            k=HARD_NEG_K,
+            dup_threshold=NEARDUP_COS,
         ),
     )
 
@@ -654,14 +652,14 @@ def _session_mutual_nn(spark, sf_dir: str) -> DataFrame:
     """Session-cached mutual-NN pairs (bounded by |vectors|/2 rows):
     consumed verbatim by emb_mutual_nn_pairs AND
     emb_training_triplets."""
-    from searchengine_spark.io import cut_lineage, load_table, session_cached
+    from searchengine_spark.io import load_table, session_cached
 
     return session_cached(
         spark,
         "ann-mutual-nn",
         sf_dir,
-        lambda: cut_lineage(
-            mutual_nn_pairs(load_table(spark, sf_dir, "embeddings"), dim=EMB_DIM)
+        lambda: mutual_nn_pairs(
+            load_table(spark, sf_dir, "embeddings"), dim=EMB_DIM
         ),
     )
 

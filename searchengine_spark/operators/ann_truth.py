@@ -85,11 +85,9 @@ def exact_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qi", "dist"),
         ).filter(F.col("vec_id") != F.element_at(qid_lit, F.col("qi") + 1))
         w = Window.partitionBy("qi").orderBy("dist", "vec_id")
-        from searchengine_spark.io import cut_lineage
-
-        # lineage-cut (r14): 8 x TRUTH_K rows, materialized once —
-        # consumers' plans see a leaf, not the corpus-scan window.
-        return cut_lineage(
+        # 8 x TRUTH_K rows, cut by the session cache — consumers'
+        # plans see a leaf, not the corpus-scan window.
+        return (
             ds.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= TRUTH_K)
             .select(

@@ -520,7 +520,7 @@ def q_kmv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     coin = hash_bucket(F.col("event_id"), n_buckets=2, salt=KMV_SPLIT_SALT)
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
     half_a = kmv_user_sketches(events.filter(coin == 0))
     half_b = kmv_user_sketches(events.filter(coin == 1))
@@ -532,12 +532,12 @@ def q_kmv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~9 corpus passes for 3 sketches' worth of work (r13
     # optimization, guide §5 caching note). The materialized frames
     # are K rows per event type — tiny.
-    merged = _cut_lineage(
+    merged = cut_lineage(
         pooled.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= F.lit(KMV_K))
         .drop("_r")
     )
-    whole = _cut_lineage(kmv_user_sketches(events))
+    whole = cut_lineage(kmv_user_sketches(events))
     magg = merged.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_merged"),
         F.max("h").alias("kth_merged"),

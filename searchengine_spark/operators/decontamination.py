@@ -98,16 +98,14 @@ def _session_keep(
     of the cache key (r13 ADVICE: a parameterized builder memoized
     under a parameter-blind tag silently returns the default build
     to a non-default caller)."""
-    from searchengine_spark.io import cut_lineage, session_cached
+    from searchengine_spark.io import session_cached
 
     return session_cached(
         spark,
         f"decontam-keep:{max_shingle_df}",
         sf_dir,
-        lambda: cut_lineage(
-            discriminative_shingles(
-                _shingles(spark, sf_dir), max_shingle_df=max_shingle_df
-            )
+        lambda: discriminative_shingles(
+            _shingles(spark, sf_dir), max_shingle_df=max_shingle_df
         ),
     )
 

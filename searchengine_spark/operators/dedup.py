@@ -23,10 +23,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from searchengine_spark.io import (
+    cut_lineage,
     default_persist_dir,
     ensure_min_partitions,
     load_table,
     materialize_barrier as _barrier,
+    session_cached,
 )
 from searchengine_spark.text.tokenizer import (
     sql_raw_tokens_expr,
@@ -367,24 +369,6 @@ def incremental_neardup_pairs(
     )
 
 
-def _cut_lineage(df: DataFrame) -> DataFrame:
-    """Lineage cut for iterative loops (star contraction / min-label
-    propagation re-derive a frame every round; without a cut each
-    round replays the whole upstream pipeline).
-
-    Default: ``localCheckpoint`` — memory-only, fast, correct on
-    local[N], but NOT fault-tolerant: on a real cluster an executor
-    loss mid-iteration loses blocks with no lineage to rebuild them.
-    With $SPARK_GRAFT_PERSIST_DIR set (the same build-scale opt-in
-    the shingle barriers use), a RELIABLE ``checkpoint`` to
-    ``<dir>/cc-checkpoints`` is used instead — survives executor
-    loss, the cluster-grade path for 100 TB runs.
-    """
-    from searchengine_spark.io import cut_lineage
-
-    return cut_lineage(df)
-
-
 CROSS_DOC_SHINGLE_K = 10  # tokens per positional shingle (Lee et al. use
 #                           50 BPE tokens; scaled to the short synthetic docs)
 CROSS_DOC_DF_CAP = 20     # drop shingles present in more docs (boilerplate)
@@ -570,7 +554,7 @@ def _star_components(sym: DataFrame, *, max_rounds: int = 50) -> DataFrame:
     Input ``sym``: symmetric (src,dst) edge set. Output: (node,
     component) for every node appearing in sym.
     """
-    edges = _cut_lineage(
+    edges = cut_lineage(
         sym.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -593,7 +577,7 @@ def _star_components(sym: DataFrame, *, max_rounds: int = 50) -> DataFrame:
         # Small-star: edges now point large -> small; contract each
         # node and all its smaller neighbors onto their minimum.
         sm = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = _cut_lineage(  # cut lineage each round
+        small = cut_lineage(  # cut lineage each round
             large.join(sm, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(sm.select("u", F.col("m").alias("v")))
@@ -646,7 +630,7 @@ def connected_components(
     execution/iteration order (and star contraction reaches the same
     min-root labeling).
     """
-    sym = _cut_lineage(
+    sym = cut_lineage(
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
@@ -655,7 +639,7 @@ def connected_components(
         # upstream edge pipeline (tokenize->shingle->MinHash->LSH for
         # the dedup caller) diameter-many times.
     )
-    labels = _cut_lineage(
+    labels = cut_lineage(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
@@ -664,7 +648,7 @@ def connected_components(
         nbr = sym.join(labels, sym.dst == labels.node).select(
             F.col("src").alias("node"), F.col("component")
         )
-        new_labels = _cut_lineage(  # cut lineage each round
+        new_labels = cut_lineage(  # cut lineage each round
             labels.unionByName(nbr)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
@@ -695,18 +679,9 @@ def connected_components(
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.io import session_cached
-
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "shingles", sf_dir,
-        # lineage-cut at the cache boundary (r14): every downstream
-        # plan re-canonicalized the tokenize->shingle subtree per
-        # persist/cache-lookup otherwise — see io.cut_lineage.
-        lambda: cut_lineage(
-            shingle_frame(load_table(spark, sf_dir, "documents"))
-        ),
+        lambda: shingle_frame(load_table(spark, sf_dir, "documents")),
     )
 
 
@@ -719,13 +694,9 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-hashing NUM_HASHES signatures per doc each time. Same
     materialize-once policy as `_shingles` (r13 optimization round;
     the first consumer in a session pays the build, the rest reuse)."""
-    from searchengine_spark.io import session_cached
-
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "minhash-bands", sf_dir,
-        lambda: cut_lineage(minhash_bands(shingles=_shingles(spark, sf_dir))),
+        lambda: minhash_bands(shingles=_shingles(spark, sf_dir)),
     )
 
 
@@ -740,13 +711,9 @@ def _capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached DEFAULT_MAX_BUCKET candidate pairs — the shared
     input of the pair/centrality/audit family (8 registry queries
     previously re-ran the band self-join + distinct each)."""
-    from searchengine_spark.io import session_cached
-
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "capped-cand-pairs", sf_dir,
-        lambda: cut_lineage(neardup_candidate_pairs(_bands(spark, sf_dir))),
+        lambda: neardup_candidate_pairs(_bands(spark, sf_dir)),
     )
 
 
@@ -926,15 +893,9 @@ def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one cached span table per (session, sf_dir): detection feeds both
     # the span query and the removal query (same policy as the index /
     # shingle caches).
-    from searchengine_spark.io import session_cached
-
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "cross-doc-spans", sf_dir,
-        lambda: cut_lineage(
-            cross_doc_spans(load_table(spark, sf_dir, "documents"))
-        ),
+        lambda: cross_doc_spans(load_table(spark, sf_dir, "documents")),
     )
 
 

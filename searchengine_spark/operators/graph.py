@@ -20,11 +20,12 @@ float tolerance anywhere.
 Scale shape per iteration: one equi-join ranks⋈edges on src (both
 sides partitioned by the join key across iterations), one keyed sum
 on dst. Degrees are precomputed once. 3 iterations keeps lineage
-shallow enough to skip checkpointing; a longer loop would reuse the
-_cut_lineage policy from operators/dedup.py. Dangling nodes cannot
-exist here (the similarity graph is symmetrized), so no global
-dangling-mass redistribution term is needed; a general web-graph
-variant would add one keyed aggregate per iteration for it.
+shallow enough to skip checkpointing; a longer loop would cut each
+round with io.cut_lineage, like the CC loop in operators/dedup.py.
+Dangling nodes cannot exist here (the similarity graph is
+symmetrized), so no global dangling-mass redistribution term is
+needed; a general web-graph variant would add one keyed aggregate
+per iteration for it.
 """
 
 from __future__ import annotations
@@ -66,17 +67,11 @@ def _session_graph(spark: SparkSession, sf_dir: str):
     def build():
         from searchengine_spark.io import cut_lineage
 
-        pairs = _capped_pairs(spark, sf_dir)
-        # Every frame is lineage-cut, not just persisted: downstream
-        # iterative consumers re-reference these in every round, and a
-        # cached-but-uncut frame makes each round's planning re-walk
-        # the derivation (io.cut_lineage has the measurements).
-        edges = cut_lineage(symmetrize(pairs))
-        deg = cut_lineage(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        )
-        ed = cut_lineage(edges.join(deg, "src"))
-        seeds = cut_lineage(
+        # The session cache cuts all four frames; edges is cut here
+        # already because the build reads it three times.
+        edges = cut_lineage(symmetrize(_capped_pairs(spark, sf_dir)))
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        seeds = (
             edges.select("src")
             .distinct()
             .filter(
@@ -87,7 +82,7 @@ def _session_graph(spark: SparkSession, sf_dir: str):
             )
             .select(F.col("src").alias("node"))
         )
-        return edges, deg, ed, seeds
+        return edges, deg, edges.join(deg, "src"), seeds
 
     return session_cached(spark, "neardup-graph", sf_dir, build)
 
@@ -104,7 +99,7 @@ def pagerank_fixed_point(
     (see symmetrize) so every node keeps receiving mass. ``shared``
     optionally passes an already-persisted (deg, ed) pair (the
     _session_graph frames); those are NOT unpersisted here."""
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
     # Persist the loop-invariant frames: without this, iteration i's
     # lineage embeds the edge-derivation subtree (here: the whole LSH
@@ -138,7 +133,7 @@ def pagerank_fixed_point(
                 (F.col("base") + F.expr(f"({DAMP_NUM} * s) div {DAMP_DEN}")).alias("r"),
                 "base",
             )
-        return _cut_lineage(ranks.select("node", F.col("r").alias("rank_fp")))
+        return cut_lineage(ranks.select("node", F.col("r").alias("rank_fp")))
     finally:
         if shared is None:
             ed.unpersist()
@@ -191,7 +186,7 @@ def eigenvector_centrality(
     the full iteration against the unrolled twin. ``materialized=True``
     marks ``edges`` as an externally persisted shared frame (the
     _session_graph edge list): it is used as-is and not unpersisted."""
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
     ed = edges if materialized else edges.persist()
     cached: list[DataFrame] = []
@@ -220,9 +215,9 @@ def eigenvector_centrality(
                 F.col("dst").alias("node"),
                 F.expr(f"CAST(s * {scale} DIV mx AS BIGINT)").alias("r"),
             )
-        # _cut_lineage is eager (localCheckpoint), so the persisted
+        # cut_lineage is eager (localCheckpoint), so the persisted
         # rounds are safe to release in the finally below.
-        return _cut_lineage(v.select("node", F.col("r").alias("ec_fp")))
+        return cut_lineage(v.select("node", F.col("r").alias("ec_fp")))
     finally:
         if not materialized:
             ed.unpersist()
@@ -400,7 +395,7 @@ def personalized_pagerank(
     extra job, unlike a driver-side count). ``shared`` optionally
     passes the already-persisted (deg, ed) _session_graph pair (used
     as-is, not unpersisted here)."""
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
     if shared is not None:
         deg, ed = shared
@@ -460,14 +455,14 @@ def personalized_pagerank(
                     ).alias("r"),
                 )
             )
-        out = _cut_lineage(ranks.select("node", F.col("r").alias("rank_fp")))
+        out = cut_lineage(ranks.select("node", F.col("r").alias("rank_fp")))
         return out
     finally:
         if shared is None:
             ed.unpersist()
             deg.unpersist()
         if bases is not None:
-            # _cut_lineage is eager, so the restart-base frame can be
+            # cut_lineage is eager, so the restart-base frame can be
             # released here (r14 persist-hygiene sweep).
             bases.unpersist()
 

@@ -150,13 +150,10 @@ def _session_mined(
     text_frequent_pairs and text_association_rules consume the SAME
     mining stages; only their (cheap, pairs-bounded) readouts differ.
     The support threshold is part of the cache key (r13 ADVICE)."""
-    from searchengine_spark.io import cut_lineage, session_cached
+    from searchengine_spark.io import session_cached
 
     items = session_cached(
-        spark,
-        "itemsets_doc_items",
-        sf_dir,
-        lambda: cut_lineage(doc_items_frame(docs)),
+        spark, "itemsets_doc_items", sf_dir, lambda: doc_items_frame(docs)
     )
     return session_cached(
         spark,

@@ -198,9 +198,9 @@ def ivfpq_train_wide(
         ]
         codebooks = _pq_lloyd_driver(sub_rows, codebooks, PQ_ITERS)
         wide = _assign_codes_wide(residual_wide(quant, cents), codebooks)
-        from searchengine_spark.operators.dedup import _cut_lineage
+        from searchengine_spark.io import cut_lineage
 
-        return _cut_lineage(wide), cents, codebooks
+        return cut_lineage(wide), cents, codebooks
     finally:
         if train is not None and train is not quant:
             train.unpersist()
@@ -536,10 +536,8 @@ def _cached(spark: SparkSession, sf_dir: str):
     from searchengine_spark.io import session_cached
 
     def build():
-        from searchengine_spark.operators.dedup import _cut_lineage
-
         wide, cents, codebooks = _cached_wide(spark, sf_dir)
-        return _cut_lineage(_explode_wide_codes_ivfpq(wide)), cents, codebooks
+        return _explode_wide_codes_ivfpq(wide), cents, codebooks
 
     return session_cached(spark, "ivfpq_train_long", sf_dir, build)
 
@@ -615,14 +613,8 @@ def _cached_base_train(spark: SparkSession, sf_dir: str):
     from searchengine_spark.io import session_cached
 
     def build():
-        from searchengine_spark.operators.dedup import _cut_lineage
-
         wide, cents, codebooks = _cached_base_train_wide(spark, sf_dir)
-        return (
-            _cut_lineage(_explode_wide_codes_ivfpq(wide)),
-            cents,
-            codebooks,
-        )
+        return _explode_wide_codes_ivfpq(wide), cents, codebooks
 
     return session_cached(spark, "ivfpq_train_base_long", sf_dir, build)
 

@@ -439,9 +439,9 @@ def kmeans_fit_assign(
         # Materialize before unpersist: the caller's plan must not
         # recompute the persisted frame after we drop it. Same
         # local-vs-reliable cut policy as the iterative CC loop.
-        from searchengine_spark.operators.dedup import _cut_lineage
+        from searchengine_spark.io import cut_lineage
 
-        return _cut_lineage(final)
+        return cut_lineage(final)
     finally:
         if train is not None and train is not quant:
             train.unpersist()

@@ -323,9 +323,9 @@ def pq_train_wide(
         smod = train_sample_mod(wide.count(), sample_target)
         codebooks = train_wide_codebooks(wide, smod=smod, iters=iters)
         final = _assign_codes_wide(wide, codebooks)
-        from searchengine_spark.operators.dedup import _cut_lineage
+        from searchengine_spark.io import cut_lineage
 
-        return _cut_lineage(final), codebooks
+        return cut_lineage(final), codebooks
     finally:
         wide.unpersist()
 

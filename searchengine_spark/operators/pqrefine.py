@@ -364,9 +364,9 @@ def q_pq_refine_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("query_id")
         )
-        from searchengine_spark.operators.dedup import _cut_lineage
+        from searchengine_spark.io import cut_lineage
 
-        return _cut_lineage(out)
+        return cut_lineage(out)
     finally:
         for frame in cached:
             frame.unpersist()

@@ -133,11 +133,9 @@ def _true_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.io import session_cached
     from searchengine_spark.operators.dedup import _shingles
 
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "prefix-jaccard-pairs", sf_dir,
-        lambda: cut_lineage(prefix_jaccard_pairs(_shingles(spark, sf_dir))),
+        lambda: prefix_jaccard_pairs(_shingles(spark, sf_dir)),
     )
 
 

@@ -131,14 +131,9 @@ def simhash_neardup_pairs(signatures: DataFrame, *, max_hamming: int = HAMMING_M
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.io import session_cached
 
-    from searchengine_spark.io import cut_lineage
-
     return session_cached(
         spark, "simhash-sigs", sf_dir,
-        # lineage-cut, not just cached (io.cut_lineage, r14)
-        lambda: cut_lineage(
-            simhash_signatures(load_table(spark, sf_dir, "documents"))
-        ),
+        lambda: simhash_signatures(load_table(spark, sf_dir, "documents")),
     )
 
 

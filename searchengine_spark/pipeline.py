@@ -276,15 +276,15 @@ def curate_with_metrics(
 
 
 def _cached_stages(spark: SparkSession, sf_dir: str, *, gate: str = "basic"):
-    """Session-memoized, lineage-cut _stages frames (round-10 verdict
-    plan audit): curate() and q_drop_reasons() share the same three
-    decision frames, so when both run in one session (the bench sweep,
-    a notebook exploring the same corpus) the tokenize+MinHash chain
-    used to execute twice. The localCheckpoint makes the first caller
-    pay the chain once and every later caller read materialized
-    partitions — same trade as the index/shingle session caches."""
+    """Session-memoized _stages frames (round-10 verdict plan audit):
+    curate() and q_drop_reasons() share the same three decision
+    frames, so when both run in one session (the bench sweep, a
+    notebook exploring the same corpus) the tokenize+MinHash chain
+    used to execute twice. The session cache's lineage cut makes the
+    first caller pay the chain once and every later caller read
+    materialized partitions — same trade as the index/shingle
+    session caches."""
     from searchengine_spark.io import session_cached
-    from searchengine_spark.operators.dedup import _cut_lineage
 
     def build():
         # Derive the near-dup frames from the dedup family's
@@ -293,16 +293,11 @@ def _cached_stages(spark: SparkSession, sf_dir: str, *, gate: str = "basic"):
         # filter instead of a second tokenize+MinHash pass per gate.
         from searchengine_spark.operators.dedup import _bands, _shingles
 
-        quality, exact_keep, drop = _stages(
+        return _stages(
             load_table(spark, sf_dir, "documents"),
             gate=gate,
             shared_shingles=_shingles(spark, sf_dir),
             shared_bands=_bands(spark, sf_dir),
-        )
-        return (
-            _cut_lineage(quality),
-            _cut_lineage(exact_keep),
-            _cut_lineage(drop),
         )
 
     return session_cached(spark, f"pipeline_stages:{gate}", sf_dir, build)
@@ -565,11 +560,7 @@ def q_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate = gopher_gate(docs.select("doc_id", "text")).select(
         "doc_id", F.col("passes").alias("gate_pass")
     )
-    from searchengine_spark.io import cut_lineage
-
-    bg = session_cached(
-        spark, "lm-bigrams", sf_dir, lambda: cut_lineage(_doc_bigrams(docs))
-    )
+    bg = session_cached(spark, "lm-bigrams", sf_dir, lambda: _doc_bigrams(docs))
     ppl = score_perplexity(docs, bigrams=bg).select("doc_id", "ppl")
     med = ppl.agg(F.round(F.percentile(F.col("ppl"), F.lit(0.5)), 6).alias("med"))
     from pyspark.sql import Window

@@ -278,11 +278,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one cached bigram frame per (session, sf_dir): feeds BOTH the
     # model lineage and the scoring lineage (same bounded-cache policy
     # as the index / shingle / span caches — no per-call cache leak).
-    from searchengine_spark.io import cut_lineage
-
-    bg = session_cached(
-        spark, "lm-bigrams", sf_dir, lambda: cut_lineage(_doc_bigrams(docs))
-    )
+    bg = session_cached(spark, "lm-bigrams", sf_dir, lambda: _doc_bigrams(docs))
     return score_perplexity(docs, bigrams=bg)
 
 
@@ -302,12 +298,12 @@ def ccnet_perplexity_buckets(
     through distrank.distributed_rank (quantized-ppl monotone buckets)
     instead of a plain per-source window, so no single task ever sorts
     a whole source (the round-9 calibration finding)."""
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
     from searchengine_spark.operators.distrank import distributed_rank
 
     if ppl is None:
         ppl = score_perplexity(docs)
-    joined = _cut_lineage(
+    joined = cut_lineage(
         ppl.select("doc_id", "ppl").join(
             docs.select("doc_id", "source"), "doc_id"
         )
@@ -342,11 +338,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from searchengine_spark.io import load_table, session_cached
 
     docs = load_table(spark, sf_dir, "documents")
-    from searchengine_spark.io import cut_lineage
-
-    bg = session_cached(
-        spark, "lm-bigrams", sf_dir, lambda: cut_lineage(_doc_bigrams(docs))
-    )
+    bg = session_cached(spark, "lm-bigrams", sf_dir, lambda: _doc_bigrams(docs))
     return ccnet_perplexity_buckets(
         docs, ppl=score_perplexity(docs, bigrams=bg)
     )

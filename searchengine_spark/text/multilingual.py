@@ -53,7 +53,6 @@ from searchengine_spark.io import (
 )
 from searchengine_spark.operators.dedup import (
     SHINGLE_K,
-    _cut_lineage,
     jaccard_pairs,
     minhash_bands,
     neardup_candidate_pairs,
@@ -366,20 +365,19 @@ def _cached_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "ml-routed-frame",
         sf_dir,
-        lambda: _cut_lineage(
-            routed_frame(
-                with_multilingual_text(load_table(spark, sf_dir, "documents"))
-            )
+        lambda: routed_frame(
+            with_multilingual_text(load_table(spark, sf_dir, "documents"))
         ),
     )
 
 
 def _cached_ml_stages(spark: SparkSession, sf_dir: str):
-    def build():
-        q, e, d = _stages_from_routed(_cached_routed(spark, sf_dir))
-        return (_cut_lineage(q), _cut_lineage(e), _cut_lineage(d))
-
-    return session_cached(spark, "ml-stages", sf_dir, build)
+    return session_cached(
+        spark,
+        "ml-stages",
+        sf_dir,
+        lambda: _stages_from_routed(_cached_routed(spark, sf_dir)),
+    )
 
 
 def q_routed_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,7 +568,7 @@ mrouted AS MATERIALIZED (
 # would otherwise re-inline the whole NFC+langid+routing chain —
 # measured exponential-ish planning/runtime blowup (DuckDB OOM at
 # sf0.001) without the fence. Spark-side the same role is played by
-# the _cut_lineage/session cache in _cached_routed.
+# the session cache's lineage cut in _cached_routed.
 
 _ROUTED_CHAIN = _MLDOCS_CTE + _ROUTED_CTES
 

@@ -185,9 +185,9 @@ def quality_percentile_by_source(docs: DataFrame) -> DataFrame:
     # blocks the ContextCleaner reclaims once the result frame is
     # dropped, and which upgrades to a reliable checkpoint under
     # $SPARK_GRAFT_PERSIST_DIR at build scale.
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
 
-    joined = _cut_lineage(sig.join(docs.select("doc_id", "source"), "doc_id"))
+    joined = cut_lineage(sig.join(docs.select("doc_id", "source"), "doc_id"))
     ranked = distributed_rank(
         joined,
         ["source"],
@@ -246,13 +246,13 @@ def quantile_normalize_by_source(docs: DataFrame) -> DataFrame:
     Both rank passes run through the audited two-level
     distributed_rank; the mapping is ONE equi-join on idx.
     """
-    from searchengine_spark.operators.dedup import _cut_lineage
+    from searchengine_spark.io import cut_lineage
     from searchengine_spark.operators.distrank import distributed_rank
 
     sig = gopher_gate(docs.select("doc_id", "text")).select(
         "doc_id", "distinct_frac"
     )
-    joined = _cut_lineage(sig.join(docs.select("doc_id", "source"), "doc_id"))
+    joined = cut_lineage(sig.join(docs.select("doc_id", "source"), "doc_id"))
     bucket = F.least(F.lit(4095), F.floor(F.col("distinct_frac") * 4096)).cast(
         "bigint"
     )

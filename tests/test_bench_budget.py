@@ -33,10 +33,9 @@ files the gate skips — a fresh clone cannot regress against nothing.
 
 from __future__ import annotations
 
-import glob
+import importlib.util
 import json
 import os
-import re
 import statistics
 
 import pytest
@@ -47,32 +46,20 @@ FLOOR_SEC = 0.3  # normalized; below this, timer noise dominates
 MIN_SHARED = 20  # median normalization needs a population
 
 
-def _detail_files() -> dict[int, str]:
-    files: dict[int, str] = {}
-    for p in sorted(glob.glob(os.path.join(REPO, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)(_driver)?\.json$", p)
-        if m and (m.group(2) or int(m.group(1)) not in files):
-            files[int(m.group(1))] = p
-    return files
-
-
-def _pair_calib(base: dict, cur: dict) -> tuple[float, float]:
-    # Probe-pair fallback (pre-round-11 primary): prefer the Spark-side
-    # shuffle probe, fall back to the scan probe consistently for BOTH
-    # files when either predates it.
-    for prefix in ("spark_calib_", "calib_"):
-        vals = []
-        for doc in (base, cur):
-            v = [doc.get(f"{prefix}start_sec"), doc.get(f"{prefix}end_sec")]
-            v = [x for x in v if isinstance(x, (int, float)) and x > 0]
-            vals.append(sum(v) / len(v) if v else None)
-        if vals[0] is not None and vals[1] is not None:
-            return vals[0], vals[1]
-    return 1.0, 1.0
+def _bench():
+    # The round-file resolver and the calibration pairing live in
+    # bench.py (stdlib-only at import), shared with bench_compare.
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def test_no_query_blows_its_budget():
-    files = _detail_files()
+    bench = _bench()
+    files = bench.detail_files(REPO)
     if len(files) < 2:
         pytest.skip("need two BENCH_DETAIL rounds to compare")
     lo, hi = sorted(files)[-2:]
@@ -95,7 +82,7 @@ def test_no_query_blows_its_budget():
         host = statistics.median(n / b for b, n in shared.values())
         mode = f"median of {len(shared)} ratios"
     else:
-        c_base, c_cur = _pair_calib(base, cur)
+        c_base, c_cur, _ = bench.pair_calib(base, cur)
         host = c_cur / c_base
         mode = "probe-pair calibration"
 

@@ -344,11 +344,16 @@ def test_tiered_rerank_beats_or_ties_one_tier(spark, sf_dir):
 
 
 def test_tiered_rerank_full_shortlist_is_exact(spark, sf_dir):
-    # shortlist == whole corpus -> re-rank IS the exact top-k
+    # shortlist == whole corpus -> re-rank IS the exact top-k. The
+    # shortlist size is the corpus row count, not a huge sentinel:
+    # cosine_topk's orderBy().limit(k) plans TakeOrderedAndProject,
+    # whose per-task top-k buffer is sized by k (10**9 exhausted the
+    # driver heap and killed the JVM).
     import searchengine_spark.operators.similarity as sim
+    from searchengine_spark.io import load_table
 
     orig = sim.SHORTLIST_K
-    sim.SHORTLIST_K = 10**9
+    sim.SHORTLIST_K = load_table(spark, sf_dir, "embeddings").count()
     try:
         r = sim.QUERIES["sim_tiered_rerank_recall"](spark, sf_dir).collect()[0]
         assert r.recall == 1.0
