@@ -8,11 +8,10 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 All real logic lives in the searchengine_spark package; this module
 only adapts it to the driver's interface.
 
-Test tiers (r14, verdict item 2 — the full ~1150-test suite takes
-~20-30 min and did not finish inside the r13 driver's window):
+Test tiers (the full ~1160-test suite does not fit a short window):
 
-    python -m pytest -m smoke tests/ -q     # ~5-6 min on local[8]
-    python -m pytest tests/ -q              # full suite
+    python -m pytest -m smoke tests/ -q     # ~7 min on 4 CPUs
+    python -m pytest tests/ -q              # full suite, 25-27 min on 4 CPUs
 
 The ``smoke`` tier (pytest.ini) runs every registry query against its
 DuckDB oracle at sf0.001 plus this module's entry() contract — one

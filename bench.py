@@ -511,21 +511,20 @@ def main() -> None:
 
     # Serving-path latency: build+cache the index ONCE (the
     # reference's architecture: offline build, interactive queries),
-    # then measure per-query search latency.
-    from searchengine_spark.index.bm25 import search
+    # then measure per-query latency of the public SearchService.query
+    # (top-k + snippets + highlighting).
     from searchengine_spark.index.builder import build_index
     from searchengine_spark.io import load_table
 
     try:
         from searchengine_spark.serve import SearchService, make_http_server
 
-        # One build serves both metrics: SearchService owns the
-        # serving-layout cache (coalesce(4), see InvertedIndex.coalesce)
+        # One service serves both metrics: it owns the serving cache
         svc = SearchService(spark, sf_dir)
-        search(svc._index, SERVE_QUERIES[0], k=10).collect()  # warm
+        svc.query(SERVE_QUERIES[0], k=10)  # warm
         t0 = time.perf_counter()
         for q in SERVE_QUERIES:
-            search(svc._index, q, k=10).collect()
+            svc.query(q, k=10)
         timings["se_query_latency_avg"] = round(
             (time.perf_counter() - t0) / len(SERVE_QUERIES), 3
         )
@@ -628,91 +627,6 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         errors["tpch_power"] = f"{type(exc).__name__}: {exc}"[:200]
 
-    # In-run stall repair (round 11): the host stalls for ~1-2 min
-    # roughly once per bench run (r10 driver: mm_png_resize 13.6s vs
-    # a stable ~1.6s; this round: five CONSECUTIVE headline queries
-    # 3-26x their stable isolated times), poisoning whichever queries
-    # are in flight and failing tests/test_bench_budget.py on pure
-    # environment noise. Apply the soak's documented min-of-2 rule
-    # inline: any headline query whose time breaches the SAME budget
-    # the gate checks (3x its previous-round time, median-host-
-    # normalized) is re-timed once and the MINIMUM recorded. A real
-    # plan regression reproduces on the re-measure; a transient stall
-    # does not.
-    remeasured: list[str] = []
-    base_doc = _budget_baseline()
-    if base_doc and base_doc.get("sf") == sf:
-        import statistics
-
-        bases = {
-            k: b
-            for k, b in base_doc.get("queries", {}).items()
-            if isinstance(b, (int, float)) and b > 0
-        }
-        # Own-profile floor (r14, verdict item 7): a query whose
-        # PREVIOUS-round time was itself stall-inflated gets a budget
-        # no transient can breach (r14 before-run: emb_pq_refine at
-        # 25.0 s vs its stable ~8 s profile slipped under the 3x(prev)
-        # budget because prev was high). Tighten each baseline to the
-        # MINIMUM of the query's times across the last few detail
-        # files — a robust per-query profile the same 3x factor then
-        # applies to.
-        for k, mn in _profile_mins(sf).items():
-            if k in bases:
-                bases[k] = min(bases[k], mn)
-        # Iterate to a fixed point (<=3 passes): re-timing the stalled
-        # queries LOWERS the median host factor, which lowers every
-        # budget, which can push previously-marginal queries over the
-        # line — they deserve the same re-measure under the recomputed
-        # budget, not a gate failure (first fixed-point run: pass 1
-        # re-timed a 37-query stall window, pass 2 caught six
-        # marginal 3.0-3.5x movers the new median exposed).
-        for _pass in range(3):
-            shared = {
-                k: (b, timings[k])
-                for k, b in bases.items()
-                if timings.get(k, 0) > 0
-            }
-            if len(shared) < 20:
-                break
-            host = statistics.median(n / b for b, n in shared.values())
-            over = [
-                name
-                for name, (b_sec, n_sec) in sorted(shared.items())
-                # same constants as tests/test_bench_budget.py
-                if name in HEADLINE
-                and n_sec > 3.0 * max(b_sec, 0.3) * host
-            ]
-            if not over:
-                break
-            for name in over:
-                # Re-time COLD (round-11 advice): a warm-session
-                # re-measure of a query whose first run built shared
-                # caches (_cached_stages, session bigrams/shingles)
-                # records a number no fresh run can match, and that
-                # minimum becomes next round's budget baseline. Clear
-                # the Spark cache AND the session memo first, the way
-                # scripts/soak.py does between factors.
-                try:
-                    from searchengine_spark.io import _SESSION_CACHE
-
-                    spark.catalog.clearCache()
-                    _SESSION_CACHE.clear()
-                except Exception:  # noqa: BLE001
-                    pass
-                t0 = time.perf_counter()
-                try:
-                    queries[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    timings[name] = min(
-                        timings[name], round(time.perf_counter() - t0, 3)
-                    )
-                    if name not in remeasured:
-                        remeasured.append(name)
-                except Exception:  # noqa: BLE001 — keep the original time
-                    pass
-
     # Rotation slot (round-12 verdict task 4): time this round's slice
     # of the non-headline registry at sf0.1. Outside `timings` by
     # design — the headline total and budget-gate baselines stay
@@ -768,8 +682,6 @@ def main() -> None:
         }
     if errors:
         out["errors"] = errors
-    if remeasured:
-        out["remeasured"] = remeasured
     detail_path = _write_detail(out, round_info)
     # Print ONE COMPACT line: every BENCH_rN.json through round 10 had
     # "parsed": null because the full dump (186 inline queries, >10 KB)
@@ -831,8 +743,8 @@ def detail_files(root: str, below: int | None = None) -> dict[int, str]:
     post-round run (BENCH_DETAIL_rNN_driver.json — round 7's landed
     mis-stamped as r08 and was renamed to its true round). The
     _driver variant wins: the driver harness is what the NEXT round's
-    driver numbers compare against. The one resolver shared by this
-    harness, tests/test_bench_budget.py and scripts/bench_compare.py."""
+    driver numbers compare against. The one resolver shared by
+    tests/test_bench_budget.py and scripts/bench_compare.py."""
     import glob
 
     files: dict[int, str] = {}
@@ -884,49 +796,6 @@ def _inferred_round() -> int:
     return max(rounds, default=0) + 1
 
 
-def _prior_details() -> dict[int, str]:
-    """Detail files of the rounds strictly below this run's (explicit
-    --round / SPARK_GRAFT_BENCH_ROUND, else the inferred round)."""
-    n = _explicit_round()
-    return detail_files(_here(), below=_inferred_round() if n is None else n)
-
-
-def _profile_mins(sf: float, n_files: int = 3) -> dict[str, float]:
-    """Per-query MIN time across the last ``n_files`` bench details at
-    the same sf (any round below this run's). Minima across runs are
-    robust to one-run stalls; used to tighten the in-run re-time
-    budgets (r14, verdict item 7). Raw seconds, not host-normalized —
-    the caller's median host factor handles that."""
-    files = _prior_details()
-    mins: dict[str, float] = {}
-    for r in sorted(files)[-n_files:]:
-        try:
-            with open(files[r]) as fh:
-                doc = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if doc.get("sf") != sf:
-            continue
-        for k, v in doc.get("queries", {}).items():
-            if isinstance(v, (int, float)) and v > 0:
-                mins[k] = min(mins.get(k, v), v)
-    return mins
-
-
-def _budget_baseline() -> dict | None:
-    """The BENCH_DETAIL document tests/test_bench_budget.py will
-    compare this run against: the highest-round detail file whose
-    round is strictly below this run's."""
-    files = _prior_details()
-    if not files:
-        return None
-    try:
-        with open(files[max(files)]) as fh:
-            return json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        return None
-
-
 def _resolve_round() -> tuple[int, str, bool]:
     """(round_n, suffix, explicit) — the round this run stamps, shared
     by the detail writer and the rotation slot so both agree. N comes
@@ -934,20 +803,20 @@ def _resolve_round() -> tuple[int, str, bool]:
     Fallback: N = the inferred round (1 + the highest round among
     CORRECTNESS_r*/BENCH_r* files on disk), re-stamped to
     (N-1, "_driver") when the previous round's CORRECTNESS snapshot
-    is fresh (the driver runs bench minutes AFTER writing it — this
-    mis-stamped rounds 7, 8, 9 before the freshness check)."""
+    is under 30 min old (the driver runs bench minutes AFTER writing
+    it — this mis-stamped rounds 7, 8, 9 before the freshness
+    check)."""
     n = _explicit_round()
     if n is not None:
         return n, "", True
     n = _inferred_round()
     suffix = ""
-    recent = float(os.environ.get("SPARK_GRAFT_BENCH_SNAPSHOT_WINDOW", "1800"))
     prev_snap = os.path.join(_here(), f"CORRECTNESS_r{n - 1:02d}.json")
     try:
         snap_age = time.time() - os.path.getmtime(prev_snap)
     except OSError:
         snap_age = None
-    if snap_age is not None and snap_age < recent:
+    if snap_age is not None and snap_age < 1800:
         # Keep this SHORT (round-11 verdict item 8): the driver's
         # capture window is 2000 chars and may merge streams — a
         # long notice here crowds out the headline JSON line.

@@ -6,11 +6,13 @@ paths given on the command line) and reports per-query movers beyond
 a ratio threshold (default 1.5x either direction).
 
 The host VM's throughput swings 2-5x run-to-run, so raw ratios lie.
-Each detail file carries calib_start_sec/calib_end_sec — a fixed
-CPU-bound probe — and this report normalizes every query time by the
-file's mean calibration time before comparing. A query is flagged
-only if its CALIBRATED ratio crosses the threshold; the raw ratio is
-shown alongside. Per the soak-derived rule (PROGRESS round 5):
+Each detail file carries calibration probes timed at the start and
+end of its run, and this report normalizes every query time by the
+file's mean probe time before comparing. The pair comes from
+bench.pair_calib: the Spark shuffle probe (spark_calib_*) when both
+files carry it, else the scan probe (calib_*) for both. A query is
+flagged only if its CALIBRATED ratio crosses the threshold; the raw
+ratio is shown alongside. Per the soak-derived rule (PROGRESS round 5):
 isolate-reproduce a flagged regression before "fixing" it.
 
 Usage:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from searchengine_spark.index.builder import InvertedIndex
+from searchengine_spark.io import check_top_k
 from searchengine_spark.text.tokenizer import tokenize_query
 
 K1_DEFAULT = 1.2
@@ -60,6 +61,7 @@ def tfidf_term_score(term_freq: Column, idf: Column) -> Column:
 def tfidf_search(index: InvertedIndex, query: str | list[str], k: int = 10, *, stem: bool = False) -> DataFrame:
     """Top-k by summed TF-IDF (no length normalization — use BM25 for
     length-aware ranking; this is the reference's simpler scorer)."""
+    check_top_k(k)
     terms = tokenize_query(query, stem=stem) if isinstance(query, str) else list(query)
     if not terms:
         return search(index, [], k=k)  # typed empty result
@@ -145,6 +147,7 @@ def search(
     Deterministic tie-break on doc_id (the reference leaves ties to
     partition order; SURVEY.md FIXTURES §4 flags this).
     """
+    check_top_k(k)
     if idf_variant not in ("log10", "okapi", "rank_bm25"):
         raise ValueError(
             f"unknown idf_variant {idf_variant!r}; expected 'log10', "
@@ -222,6 +225,7 @@ def term_scores(
 def top_k(scores: DataFrame, k: int) -> DataFrame:
     """Sum (doc_id, term_score) rows per doc -> top-k (doc_id,
     total_score), score desc, ties by doc_id asc."""
+    check_top_k(k)
     return (
         scores.groupBy("doc_id")
         .agg(F.sum("term_score").alias("total_score"))

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.index.bm25 import bm25_term_score
 from searchengine_spark.index.builder import InvertedIndex
+from searchengine_spark.io import check_top_k
 
 MAXSCORE_K = 10
 NEG_INF = -1.0e18
@@ -75,6 +76,7 @@ def maxscore_topk(
     n_candidates, n_match_any) — the counters prove pruning happened
     (n_candidates < n_match_any) while the rows prove it stayed exact.
     """
+    check_top_k(k)
     ts = query_term_scores(index, terms).cache()
     ub = ts.groupBy("word").agg(F.round(F.max("s"), 6).alias("ub"))
     ow = Window.orderBy(F.desc("ub"), F.asc("word"))  # <= |terms| rows

@@ -24,7 +24,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.io import ensure_min_partitions, load_table
+from searchengine_spark.io import check_top_k, ensure_min_partitions, load_table
 from searchengine_spark.text.tokenizer import sql_tokens_expr, tokens_column
 
 
@@ -84,6 +84,7 @@ def suggest_terms(
     vocabulary too large to scan per query, index/fuzzy.py generates
     distance-1 candidates by deletion-variant EQUI-join — no scan,
     no cross join."""
+    check_top_k(k)
     return (
         vocabulary.withColumn(
             "distance", F.levenshtein(F.col("word"), F.lit(query_term))

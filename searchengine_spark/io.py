@@ -136,6 +136,24 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     return df
 
 
+# Largest k an `orderBy(...).limit(k)` top-k operator accepts. Spark
+# plans such a limit as TakeOrderedAndProject, whose per-task selector
+# allocates 2k slots before it reads a row: k = 10**9 exhausts a 4g
+# heap and kills the JVM. A caller that wants more rows than this
+# wants a sort, not a top-k.
+MAX_TOP_K = 1_000_000
+
+
+def check_top_k(k: int, name: str = "k") -> None:
+    """Raise ValueError if ``k`` exceeds MAX_TOP_K. Called by every
+    top-k operator that takes a caller's k, before it builds a plan."""
+    if k > MAX_TOP_K:
+        raise ValueError(
+            f"{name}={k} exceeds MAX_TOP_K={MAX_TOP_K}; a top-k this "
+            "large must be a sort"
+        )
+
+
 def default_persist_dir() -> str | None:
     """Build-scale opt-in: when $SPARK_GRAFT_PERSIST_DIR is set, the
     shingle/text family routes its stage barriers through persisted

@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from searchengine_spark.io import check_top_k
 from searchengine_spark.operators.similarity import cosine_expr
 
 N_PLANES = 12
@@ -127,6 +128,8 @@ def ivf_search(
 ) -> DataFrame:
     """Probe the n_probe centroids nearest the query (by cosine) and
     exact-rerank within those buckets only."""
+    check_top_k(k)
+    check_top_k(n_probe, "n_probe")
     q = query_vec.select(F.col(vec_col).alias("qvec"))
     cent = F.array(
         *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
@@ -203,6 +206,7 @@ def ivf_search_pruned(
     the rerank is a single narrow scan-project-topk with no join at
     all: the ideal serving plan for one query at any index size.
     """
+    check_top_k(k)
     probes = query_probe_ids(centroids, qvec, n_probe)
     qlit = F.array(*[F.lit(float(x)) for x in qvec])
     return (
@@ -253,6 +257,7 @@ def ivf_search_pruned_int8(
 ) -> DataFrame:
     """ivf_search_pruned over an int8 index: literal probe set ->
     PartitionFilters -> cosine over int arrays (scales cancel)."""
+    check_top_k(k)
     probes = query_probe_ids(centroids, qvec, n_probe)
     qlit = F.array(*[F.lit(int(x)) for x in quantize_query_vec(qvec)])
     return (
@@ -329,6 +334,7 @@ def ann_search(
     """
     from itertools import combinations
 
+    check_top_k(k)
     q = query_vec.select(
         F.col(vec_col).alias("qvec"),
         bucket_expr(F.col(vec_col), dim, n_planes).alias("qbucket"),

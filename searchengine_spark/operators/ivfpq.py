@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.io import load_table, session_cached
+from searchengine_spark.io import check_top_k, load_table, session_cached
 from searchengine_spark.operators.kmeans import (
     FP_SCALE,
     ITERS,
@@ -240,6 +240,7 @@ def ivfpq_search(
     (the query residual differs per cell) — n_probe*M*KPQ exact ints
     as plan literals. Executor side: membership filter + table
     lookup + sum, zero joins."""
+    check_top_k(k)
     dim = len(qv)
     cell_d = sorted(
         (sum((qv[i] - c[i]) ** 2 for i in range(dim)), j)
@@ -301,6 +302,7 @@ def ivfpq_search_wide(
     pure map feeding TakeOrderedAndProject with ZERO exchange (the
     long path shuffles M rows per probed vector into a
     groupBy(vec_id); guide §2.4)."""
+    check_top_k(k)
     dim = len(qv)
     cell_d = sorted(
         (sum((qv[i] - c[i]) ** 2 for i in range(dim)), j)

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.io import load_table, session_cached
+from searchengine_spark.io import check_top_k, load_table, session_cached
 from searchengine_spark.operators.kmeans import (
     FP_SCALE,
     TRAIN_SAMPLE_TARGET,
@@ -384,6 +384,7 @@ def pq_search(
     """ADC top-k over the long-format codes frame: per-row table
     lookup, one groupBy(vec_id) sum of M partials, then
     TakeOrderedAndProject(k). No join, no float math."""
+    check_top_k(k)
     from searchengine_spark.io import int_array_lit
 
     dt = int_array_lit(
@@ -416,6 +417,7 @@ def pq_search_wide(
     an array fold over the codes column — a pure map feeding
     TakeOrderedAndProject(k) with ZERO exchange (the long path's
     groupBy(vec_id) shuffled M rows per corpus vector; guide §2.4)."""
+    check_top_k(k)
     from searchengine_spark.io import int_array_lit
 
     dt = int_array_lit(

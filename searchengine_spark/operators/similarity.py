@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.io import load_table
+from searchengine_spark.io import check_top_k, load_table
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -53,6 +53,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force exact top-k by cosine; query_vec is a 1-row DF
     (qvec array column). Rounded to 6 for cross-engine determinism."""
+    check_top_k(k)
     return (
         embeddings.crossJoin(F.broadcast(query_vec))
         .select(

@@ -4,14 +4,13 @@ Aggregates every module's QUERIES (name -> callable(spark, sf_dir) ->
 DataFrame) and ORACLES (name -> DuckDB SQL). __spark_entry__.py and
 bench.py consume this. Keys missing from ORACLES are non-SQL ops the
 driver checks rows-only (e.g. streaming, sketches, ML-backed ANN).
+Names come in `_MODULES` order, then each module's own order; the
+registry reads no file.
 """
 
 from __future__ import annotations
 
-import glob
 import importlib
-import json
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,118 +112,6 @@ _MODULES = (
 )
 
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def latest_verified_round(repo_root: str = _REPO_ROOT) -> dict[str, int]:
-    """name -> highest round number whose CORRECTNESS file contains it.
-
-    The driver only checks a bounded window of the registry (round 1:
-    the first 50 entries in iteration order), so a fixed ordering would
-    leave the tail permanently unverified. Any key present in any past
-    round's CORRECTNESS file counts as 'seen' — including rows-only
-    (no_oracle) entries, since the driver did execute those. The round
-    number feeds least-recently-verified rotation: environment drift
-    (the round-1→2 events.ts nanos→NTZ switch) silently invalidates old
-    green rows, so names whose latest row is oldest must re-enter the
-    driver's bounded window first.
-    """
-    import re
-
-    latest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                names = json.load(fh).keys()
-        except (OSError, ValueError, AttributeError):
-            continue  # a malformed round file must not break the registry
-        for name in names:
-            if latest.get(name, -1) < rnd:
-                latest[name] = rnd
-    return latest
-
-
-def driver_verified_names(repo_root: str = _REPO_ROOT) -> set[str]:
-    """Names the grading driver has already run, from CORRECTNESS_r*.json."""
-    return set(latest_verified_round(repo_root))
-
-
-def _green_after(since: int, repo_root: str = _REPO_ROOT) -> set[str]:
-    """Names whose LATEST driver row strictly after ``since`` is
-    hash-green.
-
-    "Latest", not "any": a flake that passes once in round N but shows
-    red again in round N+2 must NOT permanently retire its pin — the
-    most recent evidence wins. Pin retirement demands ``hash_match is
-    True`` at that latest appearance — a rows-only row (err ==
-    'no_oracle') proves only that the query executed, not that the
-    pinned regression is fixed, so a latest rows-only/red row keeps
-    the pin. Oracle-less pins therefore stay until manually removed
-    (the safe default for queries the driver can't hash-check).
-    Scanning every round file (not just the newest) matters because
-    the driver window rotates: a pin verified green in round N stays
-    out of round N+1's file, and looking only at the newest file
-    would resurrect it.
-    """
-    import re
-
-    latest: dict[str, tuple[int, bool]] = {}  # name -> (round, green)
-    for path in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) <= since:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if latest.get(name, (-1, False))[0] < rnd:
-                latest[name] = (rnd, row.get("hash_match") is True)
-    return {name for name, (_, green) in latest.items() if green}
-
-
-def reverify_names(repo_root: str = _REPO_ROOT) -> list[str]:
-    """Names force-pinned to the FRONT of the registry ordering even
-    though a past round verified them.
-
-    driver_verified_names treats any historical CORRECTNESS row as
-    forever-green, but environment drift (e.g. the events.ts testdata
-    switching nanos-long -> TIMESTAMP_NTZ between rounds 1 and 2) can
-    silently invalidate old rows. When tests/test_oracle_parity.py
-    catches such a regression, add the names to REVERIFY.json with
-    ``since_round`` = the latest round number on disk at that moment;
-    they re-enter the driver's bounded window next round.
-
-    Pins self-retire only on a green row from a round STRICTLY LATER
-    than ``since_round`` — the latest file at pin time is exactly the
-    stale record the pin overrides (all four round-3 pins were green
-    in round 1's file when they broke), so a green row there must
-    never count as healed. Without ``since_round`` a pin is permanent
-    until manually removed (the safe default).
-    """
-    path = os.path.join(repo_root, "REVERIFY.json")
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return []
-    names = data.get("names", []) if isinstance(data, dict) else data
-    since = data.get("since_round") if isinstance(data, dict) else None
-    names = [n for n in names if isinstance(n, str)]
-    if not isinstance(since, int):
-        return names  # no creation round recorded: never auto-retire
-    green = _green_after(since, repo_root)
-    return [n for n in names if n not in green]
-
-
 def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
@@ -232,26 +119,7 @@ def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
         mod = importlib.import_module(f"searchengine_spark.{name}")
         queries.update(getattr(mod, "QUERIES", {}))
         oracles.update(getattr(mod, "ORACLES", {}))
-    # Ordering: (1) regressed names pinned for re-verification, then
-    # (2) never-driver-verified queries, then (3) the verified tail
-    # sorted least-recently-verified first (ascending latest round,
-    # stable module order within a round) — so each round's bounded
-    # correctness window lands on the queries that most need a hard
-    # driver row, and once every name has been seen the window keeps
-    # rotating through the oldest rows instead of freezing on a fixed
-    # prefix (testdata drift invalidates old green rows silently).
-    latest = latest_verified_round()
-    pinned = {n: i for i, n in enumerate(reverify_names()) if n in queries}
-
-    def _key(name: str) -> tuple[int, int]:
-        if name in pinned:
-            return (0, pinned[name])
-        if name not in latest:
-            return (1, 0)
-        return (2, latest[name])
-
-    ordered = sorted(queries, key=_key)
-    return {name: queries[name] for name in ordered}, oracles
+    return queries, oracles
 
 
 def all_queries() -> dict[str, QueryFn]:

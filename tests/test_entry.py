@@ -1,11 +1,7 @@
 """The driver contract's smoke surface: entry() must run in any
 session and produce a stable schema."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 pytestmark = pytest.mark.smoke
 
@@ -35,192 +31,33 @@ def test_every_query_key_has_callable_and_alias_parity(spark):
     assert rows_only == set(), f"rows-only queries reappeared: {rows_only}"
 
 
-def test_registry_rotates_unverified_queries_to_front():
-    """The driver only runs a bounded prefix of queries() each round
-    (round 1: first 50 of 98). The registry must order queries so that
-    (1) REVERIFY.json-pinned regressions come absolutely first, then
-    (2) every name WITHOUT a CORRECTNESS_r*.json row before every name
-    WITH one — otherwise a silent driver cap leaves the tail
-    permanently unverified while looking like full coverage."""
-    from searchengine_spark.registry import (
-        all_queries,
-        driver_verified_names,
-        reverify_names,
-    )
+def test_registry_opens_no_file_and_keeps_module_order(monkeypatch):
+    """The registry's names depend only on the code: collecting them
+    opens no file, and they come in _MODULES order, each module's own
+    order kept."""
+    import builtins
+    import importlib
 
-    names = list(all_queries())
-    pinned = [n for n in reverify_names() if n in set(names)]
-    assert names[: len(pinned)] == pinned, "pinned names must lead the ordering"
-    seen = driver_verified_names()
-    if not seen:  # fresh clone without round files: nothing to rotate
-        return
-    rest = names[len(pinned):]
-    flags = [n in seen for n in rest]
-    # flags must be monotone: all False (unseen) before all True (seen)
-    assert flags == sorted(flags), (
-        "driver-verified queries appear before unverified ones: "
-        f"{[n for n, f in zip(rest, flags) if f][:5]}..."
-    )
+    from searchengine_spark import registry
 
+    registry.all_queries()  # import every module before recording
+    opened = []
+    real_open = builtins.open
 
-def test_registry_verified_tail_rotates_least_recently_verified_first():
-    """Once every name has a historical row, the bounded driver window
-    must keep rotating: the verified tail is ordered by ascending
-    latest-CORRECTNESS round, so r1-era rows (oldest, most exposed to
-    testdata drift) re-enter the window before freshly-green ones."""
-    from searchengine_spark.registry import (
-        all_queries,
-        latest_verified_round,
-        reverify_names,
-    )
+    def recording_open(file, *args, **kwargs):
+        opened.append(file)
+        return real_open(file, *args, **kwargs)
 
-    latest = latest_verified_round()
-    if not latest:  # fresh clone without round files: nothing to rotate
-        return
-    names = list(all_queries())
-    pinned = set(reverify_names())
-    tail_rounds = [latest[n] for n in names if n in latest and n not in pinned]
-    assert tail_rounds == sorted(tail_rounds), (
-        "verified tail is not least-recently-verified-first"
-    )
+    monkeypatch.setattr(builtins, "open", recording_open)
+    queries, oracles = registry.all_queries(), registry.all_oracles()
+    monkeypatch.undo()
+    assert opened == []
 
-
-def test_latest_verified_round_tracks_max_round(tmp_path):
-    import json
-
-    from searchengine_spark.registry import latest_verified_round
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"a": {"hash_match": True}, "b": {"hash_match": True}})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps({"b": {"hash_match": False, "err": "x"}, "c": {"hash_match": True}})
-    )
-    assert latest_verified_round(str(tmp_path)) == {"a": 1, "b": 3, "c": 3}
-
-
-def test_reverify_pins_self_retire_only_on_later_round(tmp_path):
-    """A pinned name green in a round STRICTLY LATER than since_round
-    retires; still-broken or not-rerun names stay pinned."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(
-        json.dumps(
-            {"names": ["q_healed", "q_still_broken", "q_not_rerun"], "since_round": 2}
-        )
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"q_healed": {"hash_match": False, "err": "boom"}})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps(
-            {
-                "q_healed": {"hash_match": True, "err": None},
-                "q_still_broken": {"hash_match": False, "err": "AnalysisException"},
-            }
-        )
-    )
-    assert reverify_names(str(tmp_path)) == ["q_still_broken", "q_not_rerun"]
-
-
-def test_reverify_green_at_pin_time_round_never_retires(tmp_path):
-    """The DOA scenario the mechanism must survive: the pinned name
-    IS green in the latest file on disk — because that file predates
-    the drift (the repo's own round-1-to-2 history). The pin must
-    stay active until a STRICTLY LATER round reruns it."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(
-        json.dumps({"names": ["q_drifted"], "since_round": 2})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"q_drifted": {"hash_match": True, "err": None}})
-    )
-    assert reverify_names(str(tmp_path)) == ["q_drifted"]
-
-
-def test_reverify_rows_only_row_never_retires_pin(tmp_path):
-    """A rows-only row (err == 'no_oracle') proves execution, not
-    correctness — it must NOT self-retire a pin; only hash_match does."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(
-        json.dumps({"names": ["q_rows_only"], "since_round": 2})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps(
-            {"q_rows_only": {"hash_match": None, "err": "no_oracle", "spark_rows": 7}}
-        )
-    )
-    assert reverify_names(str(tmp_path)) == ["q_rows_only"]
-
-
-def test_reverify_flake_green_then_red_stays_pinned(tmp_path):
-    """Flake-retirement semantics (round-7 advice item): a pin that
-    goes green in round N but RED again in round N+2 must stay pinned
-    — retirement follows the LATEST driver evidence, not 'any green
-    after since_round'. The reverse order (red then green) retires."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(
-        json.dumps({"names": ["q_flaky", "q_healed_late"], "since_round": 2})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps(
-            {
-                "q_flaky": {"hash_match": True, "err": None},
-                "q_healed_late": {"hash_match": False, "err": "boom"},
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r05.json").write_text(
-        json.dumps(
-            {
-                "q_flaky": {"hash_match": False, "err": "hash mismatch"},
-                "q_healed_late": {"hash_match": True, "err": None},
-            }
-        )
-    )
-    assert reverify_names(str(tmp_path)) == ["q_flaky"]
-
-
-def test_reverify_without_since_round_is_permanent(tmp_path):
-    """Legacy/omitted since_round: pins never auto-retire (safe
-    default) even when the latest round shows them green."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(json.dumps({"names": ["a", "b"]}))
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({"a": {"hash_match": True, "err": None}})
-    )
-    assert reverify_names(str(tmp_path)) == ["a", "b"]
-
-
-def test_reverify_flake_green_then_red_stays_pinned(tmp_path):
-    """Round-7 ADVICE fix: 'latest evidence wins' — a name green in
-    round 3 but RED again in round 4 must stay pinned; green-once must
-    not permanently retire."""
-    import json
-
-    from searchengine_spark.registry import reverify_names
-
-    (tmp_path / "REVERIFY.json").write_text(
-        json.dumps({"names": ["q_flaky"], "since_round": 2})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps({"q_flaky": {"hash_match": True, "err": None}})
-    )
-    (tmp_path / "CORRECTNESS_r04.json").write_text(
-        json.dumps({"q_flaky": {"hash_match": False, "err": "drift again"}})
-    )
-    assert reverify_names(str(tmp_path)) == ["q_flaky"]
+    expected_q: dict[str, None] = {}
+    expected_o: dict[str, None] = {}
+    for name in registry._MODULES:
+        mod = importlib.import_module(f"searchengine_spark.{name}")
+        expected_q.update(dict.fromkeys(getattr(mod, "QUERIES", {})))
+        expected_o.update(dict.fromkeys(getattr(mod, "ORACLES", {})))
+    assert list(queries) == list(expected_q)
+    assert list(oracles) == list(expected_o)

@@ -78,3 +78,30 @@ def test_search_rejects_unknown_idf_variant(spark):
     idx = build_index(docs, cache_tokens=False)
     with pytest.raises(ValueError, match="idf_variant"):
         search(idx, "murder", idf_variant="bm25plus")
+
+
+def test_top_k_above_bound_raises_before_any_job(spark):
+    """k = 10**9 would make TakeOrderedAndProject allocate 2k slots per
+    task and kill the JVM; the operator must refuse it while building
+    the plan, and the session must stay usable."""
+    from searchengine_spark.io import MAX_TOP_K
+    from searchengine_spark.operators.similarity import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(1, 6)],
+        "vec_id bigint, embedding array<double>",
+    )
+    q = spark.createDataFrame([([1.0, 1.0],)], "qvec array<double>")
+    idx = build_index(_docs(spark, [(1, "murder trial court")]), cache_tokens=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("top-k-bound", "over-range k")
+    try:
+        with pytest.raises(ValueError, match="MAX_TOP_K"):
+            cosine_topk(emb, q, k=10**9)
+        with pytest.raises(ValueError, match="MAX_TOP_K"):
+            search(idx, "murder", k=MAX_TOP_K + 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("top-k-bound") == []
+    top = cosine_topk(emb, q, k=2).collect()
+    assert [r.vec_id for r in top] == [1, 2]
