@@ -9,13 +9,15 @@ Usage: python scripts/gen_coverage_table.py [--check]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MARKER = "## Full driver-contract registry"
-COVERAGE = "/root/repo/COVERAGE.md"
+COVERAGE = os.path.join(ROOT, "COVERAGE.md")
 
 
 def registry_table() -> str:

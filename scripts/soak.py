@@ -13,7 +13,7 @@ and per-user funnel paths. Every copy is new key mass, so work should
 scale ~linearly; a superlinear ratio is the red flag this soak exists
 to catch.
 
-Usage: python scripts/soak.py          # writes /root/repo/SOAK.json
+Usage: python scripts/soak.py          # writes SOAK.json at the checkout root
 Scratch parquet goes under /tmp/spark_graft_soak (not the repo).
 """
 
@@ -25,7 +25,9 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SOAK_JSON = os.path.join(ROOT, "SOAK.json")
+sys.path.insert(0, ROOT)
 
 BASE = "/root/testdata/sf0.1"
 SCRATCH = "/tmp/spark_graft_soak"
@@ -630,10 +632,10 @@ def main() -> None:
         # SOAK.json (the full soak takes hours; the skew section is
         # independently regenerable).
         section = run_skew_soak(spark, queries)
-        with open("/root/repo/SOAK.json") as fh:
+        with open(SOAK_JSON) as fh:
             report = json.load(fh)
         report["skewed"] = section
-        with open("/root/repo/SOAK.json", "w") as fh:
+        with open(SOAK_JSON, "w") as fh:
             json.dump(report, fh, indent=2)
         print(json.dumps(section))
         spark.stop()
@@ -690,10 +692,10 @@ def main() -> None:
                 r["remeasured"] = True
             if r.get("x1", 0) > 0 and r.get("x5", 0) > 0:
                 r["ratio_x5"] = round(r["x5"] / r["x1"], 2)
-        with open("/root/repo/SOAK.json") as fh:
+        with open(SOAK_JSON) as fh:
             report = json.load(fh)
         report["queries"].update(results)
-        with open("/root/repo/SOAK.json", "w") as fh:
+        with open(SOAK_JSON, "w") as fh:
             json.dump(report, fh, indent=2)
         print(json.dumps(results))
         spark.stop()
@@ -874,7 +876,7 @@ def main() -> None:
     )
     report["stream_hotkey"] = hotkey
     report["skewed"] = run_skew_soak(spark, queries)
-    with open("/root/repo/SOAK.json", "w") as fh:
+    with open(SOAK_JSON, "w") as fh:
         json.dump(report, fh, indent=2)
     print(json.dumps(report))
     spark.stop()

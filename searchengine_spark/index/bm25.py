@@ -23,6 +23,7 @@ Query plan shape (at any scale):
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -386,12 +387,30 @@ def highlight(
     A LIST of terms highlights them all in ONE alternation pass —
     sequential per-term passes could rematch text inside tags already
     inserted by an earlier term."""
-    import re
-
-    terms = [query] if isinstance(query, str) else [t for t in query if t]
-    if not terms:
+    pattern = highlight_pattern(query)
+    if pattern is None:
         return df
-    pattern = "|".join(re.escape(t) for t in terms)
     return df.withColumn(
         col, F.regexp_replace(F.col(col), pattern, f"<{tag}>$0</{tag}>")
     )
+
+
+def highlight_text(
+    text: str | None, query: str | list[str], *, tag: str = "mark"
+) -> str | None:
+    """:func:`highlight` of one driver-side string: the same pattern,
+    matched by Python's ``re`` instead of Java's regex (the pattern is
+    literals and escapes only, which both read alike)."""
+    pattern = highlight_pattern(query)
+    if pattern is None or text is None:
+        return text
+    return re.sub(pattern, rf"<{tag}>\g<0></{tag}>", text)
+
+
+def highlight_pattern(query: str | list[str]) -> str | None:
+    """The literal-match alternation both highlighters use, or None
+    when there is nothing to highlight."""
+    terms = [query] if isinstance(query, str) else [t for t in query if t]
+    if not terms:
+        return None
+    return "|".join(re.escape(t) for t in terms)

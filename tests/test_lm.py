@@ -2,11 +2,12 @@
 goldens + the unseen-transition branches."""
 
 import math
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from searchengine_spark.text.lm import SMOOTH_ALPHA, bigram_lm, score_perplexity
 

@@ -194,30 +194,15 @@ def test_service_ranking_matches_bm25_search(spark, sf_dir, service):
     assert service.query("the a", fuzzy=True) == []
 
 
-def _plan_leaves(plan) -> list[str]:
-    """Leaf operators of an executed plan, looking through adaptive
-    and query-stage wrappers but not into a cached relation's own
-    (build-time) plan."""
-    name = plan.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        return _plan_leaves(plan.executedPlan())
-    if name.endswith("QueryStageExec"):
-        return _plan_leaves(plan.plan())
-    kids = plan.children()
-    if kids.size() == 0:
-        return [plan.simpleString(25)]
-    return [leaf for i in range(kids.size()) for leaf in _plan_leaves(kids.apply(i))]
-
-
-# Spark jobs a warm non-fuzzy /search runs on the fixture: the top-k
-# over the doc_id-partitioned term scores, and the snippet lookup.
-WARM_QUERY_JOBS = 2
+# Spark jobs a warm /search runs on the fixture: none — it is
+# answered from the in-memory serving shard.
+WARM_QUERY_JOBS = 0
 
 
 def test_warm_query_reads_only_cached_tables(spark, service, monkeypatch):
-    """A warm request neither scans files (the documents table, the
-    index sources) nor launches more jobs than the cached serving
-    plan needs."""
+    """A warm request, plain or fuzzy, launches no Spark job and
+    collects no DataFrame: it reads only the serving shard the first
+    request built."""
     sc = spark.sparkContext
     collected = []
     cls = type(spark.range(1))
@@ -227,20 +212,229 @@ def test_warm_query_reads_only_cached_tables(spark, service, monkeypatch):
         collected.append(df)
         return collect(df)
 
-    service.query("spark join window", k=10)  # warm: builds the caches
+    service.query("spark join window", k=10)  # warm: builds the shard
     monkeypatch.setattr(cls, "collect", recording_collect)
     sc.setJobGroup("serve-warm-query", "warm /search request")
     try:
         hits = service.query("spark join window", k=10)
+        fuzzy_hits = service.query("sparkk joinn", k=10, fuzzy=True)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert hits
+    assert hits and fuzzy_hits
     jobs = sc.statusTracker().getJobIdsForGroup("serve-warm-query")
-    assert 0 < len(jobs) <= WARM_QUERY_JOBS, jobs
-    leaves = [
-        leaf
-        for df in collected
-        for leaf in _plan_leaves(df._jdf.queryExecution().executedPlan())
+    assert len(jobs) == WARM_QUERY_JOBS, jobs
+    assert collected == []
+
+
+@pytest.fixture(scope="module")
+def docs(spark, sf_dir):
+    from searchengine_spark.io import load_table
+
+    return load_table(spark, sf_dir, "documents")
+
+
+@pytest.fixture(scope="module")
+def index(docs):
+    from searchengine_spark.index.builder import build_index
+
+    return build_index(docs).cache()
+
+
+def test_repeated_query_term_counts_once(service, index):
+    """The Spark path's isin filter counts a repeated term once; the
+    shard must too."""
+    from searchengine_spark.index.bm25 import search
+
+    once = _served(service.query("spark join", k=10))
+    assert once and _served(service.query("spark spark join", k=10)) == once
+    assert _ranked(search(index, "spark spark join", k=10).collect()) == once
+
+
+def test_highlighted_snippets_match_bm25_highlight(service, docs, index):
+    """Each hit's snippet is bm25.highlight's over the same snippet
+    table: the raw query as one literal (regex metacharacters and case
+    kept), or the fuzzy-corrected terms each on its own."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.index.bm25 import highlight, snippet_table
+    from searchengine_spark.index.phrase import correct_terms
+    from searchengine_spark.text.tokenizer import tokenize_query
+
+    snippets = snippet_table(docs, max_len=200)
+    vocab = index.idf_values.select("word", "doc_freq")
+    cases = [(q, False) for q in ("Spark (join)+", "spark a.b|c", "spark", "Spark JOIN")]
+    cases += [(q, True) for q in ("sparkk joinn", "Wndow data")]
+    for q, fuzzy in cases:
+        hits = service.query(q, k=10, fuzzy=fuzzy)
+        assert hits, q
+        terms = correct_terms(vocab, tokenize_query(q))[0] if fuzzy else q
+        want = dict(
+            highlight(
+                snippets.filter(F.col("doc_id").isin([h["doc_id"] for h in hits])),
+                "snippet",
+                terms,
+            ).collect()
+        )
+        assert [h["snippet"] for h in hits] == [want[h["doc_id"]] for h in hits], q
+
+
+def test_highlight_text_matches_spark_regexp_replace(spark):
+    """bm25.highlight_text (Python re) marks exactly what bm25.highlight
+    (Spark's Java regex) marks, over text with regex metacharacters,
+    mixed case and overlapping terms."""
+    from searchengine_spark.index.bm25 import highlight, highlight_text
+
+    texts = [
+        "Spark (join)+ and spark (join)+ and SPARK (join)",
+        "a.b|c beside axb|c and a.b|c|d",
+        "[x] $1 \\d+ ^caret$ {2} tab\there naïve",
+        None,
     ]
-    # every leaf a cached-table scan: no FileScan of documents or index
-    assert leaves and all(leaf.startswith("InMemoryTableScan") for leaf in leaves), leaves
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, snippet string")
+    for terms in (
+        "Spark (join)+",
+        "a.b|c",
+        ["spark", "Spark"],
+        ["(join)+", "join", "jo"],
+        ["[x]", "$1", "\\d+", "^caret$", "{2}", "tab\there", "naïve"],
+        [],
+    ):
+        want = dict(highlight(df, "snippet", terms).collect())
+        got = {i: highlight_text(t, terms) for i, t in enumerate(texts)}
+        assert got == want, terms
+
+
+def test_fuzzy_correction_matches_correct_terms(spark, index):
+    """The shard's correction is phrase.correct_terms': a term with no
+    word within distance 2 is dropped, a distance tie goes to the
+    higher doc_freq, a doc_freq tie to the smaller word."""
+    from searchengine_spark.index.phrase import correct_terms
+    from searchengine_spark.serve import ServingShard
+
+    vocab = spark.createDataFrame(
+        [("spark", 10), ("spare", 20), ("stark", 5), ("abcd", 5), ("abce", 5),
+         ("naïve", 3)],
+        "word string, doc_freq long",
+    )
+    shard = ServingShard(
+        spark.createDataFrame([("spark", 1, 1.0)], "word string, doc_id long, term_score double"),
+        spark.createDataFrame([(1, "spark")], "doc_id long, snippet string"),
+        vocab,
+    )
+    for terms, want in (
+        (["zzzzzz"], []),                      # nothing within 2: dropped
+        (["sparx"], ["spare"]),                # distance-1 tie: doc_freq
+        (["abcf"], ["abcd"]),                  # doc_freq tie: word
+        (["naive"], ["naïve"]),                # a letter outside a-z
+        (["spxxk"], ["spark"]),                # distance 2, bag distance 2
+        (["spark", "sparx", "zzzzzz", "sparx"], ["spark", "spare", "spare"]),
+    ):
+        assert correct_terms(vocab, terms)[0] == want, terms
+        assert shard.correct(terms) == want, terms
+
+    real = ServingShard(
+        spark.createDataFrame([], "word string, doc_id long, term_score double"),
+        spark.createDataFrame([], "doc_id long, snippet string"),
+        index.idf_values.select("word", "doc_freq"),
+    )
+    terms = ["sparkk", "joinn", "wndow", "dta", "zzzzqqqq", "spark", "merg"]
+    assert real.correct(terms) == correct_terms(
+        index.idf_values.select("word", "doc_freq"), terms
+    )[0]
+
+
+def test_shard_top_k_matches_bm25_top_k_on_exact_ties(spark):
+    """Docs with bit-equal totals rank by doc_id, as bm25.top_k ranks
+    them."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.index.bm25 import top_k
+    from searchengine_spark.serve import ServingShard
+
+    scores = spark.createDataFrame(
+        [("spark", 3, 1.0), ("spark", 1, 1.0), ("spark", 4, 0.25),
+         ("spark", 2, 1.0), ("join", 2, 0.5), ("join", 4, 0.75)],
+        "word string, doc_id long, term_score double",
+    )
+    shard = ServingShard(
+        scores,
+        spark.createDataFrame([], "doc_id long, snippet string"),
+        spark.createDataFrame([], "word string, doc_freq long"),
+    )
+    for terms, k in ((["spark"], 2), (["spark", "join"], 4), (["join"], 10)):
+        want = top_k(scores.filter(F.col("word").isin(terms)), k).collect()
+        assert shard.top_k(terms, k) == [tuple(r) for r in want], terms
+
+
+def test_query_rejects_k_above_max_top_k(service):
+    from searchengine_spark.io import MAX_TOP_K
+
+    with pytest.raises(ValueError):
+        service.query("spark", k=MAX_TOP_K + 1)
+
+
+def test_concurrent_first_requests_build_the_shard_once(spark, sf_dir, monkeypatch):
+    """Requests that arrive together before the shard exists wait for
+    one build and get the same answer."""
+    import searchengine_spark.serve as serve
+
+    builds = []
+
+    class CountingShard(serve.ServingShard):
+        def __init__(self, *args):
+            builds.append(1)
+            super().__init__(*args)
+
+    monkeypatch.setattr(serve, "ServingShard", CountingShard)
+    svc = serve.SearchService(spark, sf_dir)
+    assert set(svc.shard_shape().values()) == {None}  # not built yet
+    n = 4
+    start = threading.Barrier(n)
+    results = [None] * n
+
+    def first_request(i):
+        start.wait(timeout=60)
+        results[i] = svc.query("spark join window", k=5)
+
+    threads = [threading.Thread(target=first_request, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert results[0] and all(r == results[0] for r in results)
+    shape = svc.shard_shape()
+    assert shape["postings"] > 0 and shape["terms"] > 0 and shape["mb"] > 0
+    assert shape["build_s"] >= 0
+
+
+def test_metrics_endpoint_counts_requests_and_shard(service):
+    from searchengine_spark.serve import LATENCY_BUCKETS_S, make_http_server
+
+    server = make_http_server(service, port=0)
+    port = server.server_address[1]
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    try:
+        assert _get(port, "/search?q=spark&k=3")[0] == 200
+        assert _get(port, "/search?q=spark&k=abc")[0] == 400
+        assert _get(port, "/search?q=sparkk&k=3&fuzzy=1")[0] == 200
+        assert _get(port, "/similar?doc_id=0&k=3")[0] == 200
+        assert _get(port, "/nowhere")[0] == 404
+        status, m = _get(port, "/metrics")
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert status == 200
+    assert m["latency_buckets_s"] == list(LATENCY_BUCKETS_S)
+    ep = m["endpoints"]
+    want = {"/search": (2, 1), "/search?fuzzy=1": (1, 0), "/similar": (1, 0), "other": (1, 1)}
+    assert {e: (v["requests"], v["errors"]) for e, v in ep.items()} == want
+    for v in ep.values():
+        assert len(v["latency_hist"]) == len(LATENCY_BUCKETS_S) + 1
+        assert sum(v["latency_hist"]) == v["requests"]
+        assert v["latency_s_sum"] > 0
+    shard = m["shard"]
+    assert shard["postings"] > 0 and shard["terms"] > 0 and shard["mb"] > 0
+    assert shard["build_s"] is not None

@@ -13,16 +13,19 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 MAX_RATIO = 5.0
 
 
 def _soak_mod():
     spec = importlib.util.spec_from_file_location(
-        "soak", "/root/repo/scripts/soak.py"
+        "soak", os.path.join(ROOT, "scripts", "soak.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -150,7 +153,7 @@ def test_salted_agg_engages_and_matches_on_fixture(skew_docs):
 
 
 def test_soak_skew_section_recorded_and_bounded():
-    with open("/root/repo/SOAK.json") as fh:
+    with open(os.path.join(ROOT, "SOAK.json")) as fh:
         rec = json.load(fh)
     mod = _soak_mod()
     skewed = rec.get("skewed")
@@ -178,7 +181,7 @@ def test_heavy_x10_adjudication_recorded_and_sublinear():
     construction, and the engine's per-candidate rate IMPROVES at x10
     (sublinear per unit of real work — the outlier was work volume,
     not a regression)."""
-    with open("/root/repo/SOAK.json") as fh:
+    with open(os.path.join(ROOT, "SOAK.json")) as fh:
         rec = json.load(fh)
     adj = rec.get("heavy_x10_adjudication_r12")
     if adj is None:

@@ -4,6 +4,9 @@ the documented bound. Regenerate with `python scripts/soak.py`."""
 
 import importlib.util
 import json
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # x5 bound: linear work would be <=5; the recorded worst cases are the
 # documented sublinear-cluster trades (~2.8). Anything past 5 means a
@@ -29,7 +32,7 @@ NORMALIZED_PAIR_HEAVY = {"dedup_prefix_jaccard_pairs"}
 
 def _soak_mod():
     spec = importlib.util.spec_from_file_location(
-        "soak", "/root/repo/scripts/soak.py"
+        "soak", os.path.join(ROOT, "scripts", "soak.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -37,7 +40,7 @@ def _soak_mod():
 
 
 def test_soak_record_matches_script_and_stays_linear():
-    with open("/root/repo/SOAK.json") as fh:
+    with open(os.path.join(ROOT, "SOAK.json")) as fh:
         rec = json.load(fh)
     mod = _soak_mod()
     assert set(rec["queries"]) == set(mod.QUERIES), (
@@ -54,7 +57,7 @@ def test_soak_record_matches_script_and_stays_linear():
 
 
 def test_soak_heavy_x10_recorded_and_bounded():
-    with open("/root/repo/SOAK.json") as fh:
+    with open(os.path.join(ROOT, "SOAK.json")) as fh:
         rec = json.load(fh)
     mod = _soak_mod()
     heavy = rec.get("heavy_x10")
@@ -82,7 +85,7 @@ def test_soak_heavy_x10_recorded_and_bounded():
 
 
 def test_soak_hotkey_stream_recorded_and_linear():
-    with open("/root/repo/SOAK.json") as fh:
+    with open(os.path.join(ROOT, "SOAK.json")) as fh:
         rec = json.load(fh)
     hot = rec.get("stream_hotkey")
     assert hot is not None, "SOAK.json predates the hot-key pass — rerun"
