@@ -17,7 +17,9 @@ Per query the output records:
      "rows": <spark row count>, "sec": <wall>, "error": <on fail>}
 "rows_only" = no oracle registered (non-SQL-expressible op; the
 driver applies the same weaker check). tests/test_fullcheck.py fails
-if any registry name is missing from the latest committed FULLCHECK.
+if any registry name is missing from the latest committed FULLCHECK,
+so an ``--only`` sweep without ``--round`` merges into the latest
+existing FULLCHECK_r*.json (see output_round).
 """
 
 from __future__ import annotations
@@ -33,6 +35,28 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
+
+
+def _rounds(repo: str, prefix: str) -> list[int]:
+    return [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(repo, f"{prefix}_r*.json"))
+        if (m := re.search(rf"{prefix}_r(\d+)\.json$", p))
+    ]
+
+
+def output_round(repo: str, requested: int | None, *, partial: bool) -> int:
+    """The N of the FULLCHECK_r{N}.json a sweep writes.
+
+    An explicit ``--round`` wins. A partial (``--only``) sweep merges
+    into the latest existing FULLCHECK, so it never becomes a new,
+    incomplete latest file; a full sweep opens the round after the
+    latest CORRECTNESS_r*.json."""
+    if requested is not None:
+        return requested
+    if partial and (done := _rounds(repo, "FULLCHECK")):
+        return max(done)
+    return max(_rounds(repo, "CORRECTNESS"), default=0) + 1
 
 
 def main() -> int:
@@ -54,14 +78,7 @@ def main() -> int:
     if args.only:
         names = [n for n in args.only.split(",") if n in queries]
 
-    n_round = args.round
-    if n_round is None:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"_r(\d+)\.json$", p))
-        ]
-        n_round = max(rounds, default=0) + 1
+    n_round = output_round(REPO, args.round, partial=bool(args.only))
 
     spark = get_spark("full-parity")
     out: dict[str, dict] = {}

@@ -145,16 +145,18 @@ def search(
 ) -> DataFrame:
     """Top-k docs for a query -> (doc_id, total_score), score desc.
 
-    Deterministic tie-break on doc_id (the reference leaves ties to
-    partition order; SURVEY.md FIXTURES §4 flags this).
+    Ties break on doc_id only where two docs' summed scores are
+    bit-equal (the reference leaves ties to partition order; SURVEY.md
+    FIXTURES §4 flags this): the sum's order follows the plan's
+    partitioning, so docs whose totals agree to 6 places can swap.
+    ``queries.rounded_top_k`` and ``search_many(round_scores=6)`` rank
+    the rounded total and are deterministic at display precision.
     """
     check_top_k(k)
-    if idf_variant not in ("log10", "okapi", "rank_bm25"):
-        raise ValueError(
-            f"unknown idf_variant {idf_variant!r}; expected 'log10', "
-            "'okapi' or 'rank_bm25'"
-        )
     terms = tokenize_query(query, stem=stem) if isinstance(query, str) else list(query)
+    # Built before the empty-query exit so an unknown idf_variant
+    # raises for every query.
+    scores = query_term_scores(index, terms, idf_variant=idf_variant, k1=k1, b=b)
     if not terms:
         # Empty result with the SAME doc_id type as the index (any id
         # type is allowed), so empty- and non-empty-query results
@@ -169,7 +171,26 @@ def search(
             ]
         )
         return index.term_frequencies.sparkSession.createDataFrame([], schema)
+    return top_k(scores, k)
 
+
+def query_term_scores(
+    index: InvertedIndex,
+    terms: list[str] | tuple[str, ...],
+    *,
+    idf_variant: str = "log10",
+    k1: float = K1_DEFAULT,
+    b: float = B_DEFAULT,
+) -> DataFrame:
+    """:func:`term_scores` over the postings of ``terms`` only, with
+    the idf of ``idf_variant``: "log10" (the reference), "okapi"
+    (:func:`okapi_idf`) or "rank_bm25" (:func:`rank_bm25_idf_table`)."""
+    if idf_variant not in ("log10", "okapi", "rank_bm25"):
+        raise ValueError(
+            f"unknown idf_variant {idf_variant!r}; expected 'log10', "
+            "'okapi' or 'rank_bm25'"
+        )
+    terms = list(terms)
     # Manual filter-first shape (matches the reference's intent at
     # pyapp.py:93); Catalyst pushes the isin into the parquet scan.
     tf = index.term_frequencies.filter(F.col("word").isin(terms))
@@ -180,13 +201,14 @@ def search(
     else:
         idf = index.idf_values.filter(F.col("word").isin(terms))
         if idf_variant == "okapi":
-            idf = idf.join(F.broadcast(index.scoring_params.select("n_docs"))).select(
+            idf = idf.crossJoin(
+                F.broadcast(index.scoring_params.select("n_docs"))
+            ).select(
                 "word", okapi_idf(F.col("n_docs"), F.col("doc_freq")).alias("idf")
             )
         else:
             idf = idf.select("word", "idf")
-
-    return top_k(term_scores(index, tf, idf, k1=k1, b=b), k)
+    return term_scores(index, tf, idf, k1=k1, b=b)
 
 
 def term_scores(
@@ -197,13 +219,17 @@ def term_scores(
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
 ) -> DataFrame:
-    """(word, doc_id, term_score): each posting's BM25 contribution.
+    """(word, doc_id, ..., term_score): each posting's BM25
+    contribution — the one place the BM25 join is written.
 
     ``tf`` is (a filter of) the index's term_frequencies and ``idf``
-    a (word, idf) frame; |d| and avgdl come from the index. With the
-    unfiltered tables this is the per-term score table a long-lived
-    server caches once, so a query only sums its terms' rows."""
+    a (word, idf) frame; |d| and avgdl come from the index. Every
+    column of ``tf`` but term_freq passes through, so a (query_id,
+    weight) carried in by a broadcast join reaches batched and
+    weighted callers. With the unfiltered tables this is the
+    per-term score table the serving shard pulls once."""
     params = index.scoring_params.select("avgdl")
+    extra = [c for c in tf.columns if c not in ("word", "doc_id", "term_freq")]
     return (
         tf.join(F.broadcast(idf), "word")
         .join(index.doc_lengths, "doc_id")
@@ -211,6 +237,7 @@ def term_scores(
         .select(
             "word",
             "doc_id",
+            *extra,
             bm25_term_score(
                 F.col("term_freq"),
                 F.col("doc_length"),
@@ -225,7 +252,13 @@ def term_scores(
 
 def top_k(scores: DataFrame, k: int) -> DataFrame:
     """Sum (doc_id, term_score) rows per doc -> top-k (doc_id,
-    total_score), score desc, ties by doc_id asc."""
+    total_score), score desc, then doc_id asc.
+
+    The doc_id tie-break holds only for bit-equal sums: the raw sum's
+    order follows the plan's partitioning, so two docs with equal
+    6-place totals can come out in either order. The rankings that
+    are deterministic at display precision are
+    ``queries.rounded_top_k`` and ``search_many(round_scores=6)``."""
     check_top_k(k)
     return (
         scores.groupBy("doc_id")
@@ -286,21 +319,15 @@ def search_many(
     qterms = spark.createDataFrame(pairs, "query_id string, word string")
     words = sorted({w for _, w in pairs})
 
-    tf = index.term_frequencies.filter(F.col("word").isin(words))
+    tf = index.term_frequencies.filter(F.col("word").isin(words)).join(
+        F.broadcast(qterms), "word"
+    )
     idf = index.idf_values.filter(F.col("word").isin(words)).select("word", "idf")
-    score = F.sum(
-        bm25_term_score(
-            F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf"),
-            k1=k1, b=b,
-        )
-    ).alias("total_score")
+    score = F.sum("term_score").alias("total_score")
     if round_scores is not None:
         score = F.round(score, round_scores).alias("total_score")
     totals = (
-        tf.join(F.broadcast(qterms), "word")
-        .join(F.broadcast(idf), "word")
-        .join(index.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(index.scoring_params.select("avgdl")))
+        term_scores(index, tf, idf, k1=k1, b=b)
         .groupBy("query_id", "doc_id")
         .agg(score)
     )

@@ -35,6 +35,7 @@ from searchengine_spark.index.queries import (
     BM25_QUERY_TERMS,
     _index,
     index_body_sql,
+    rounded_top_k,
 )
 from searchengine_spark.io import load_table
 from searchengine_spark.text.tokenizer import sql_tokens_expr, tokens_column
@@ -106,12 +107,7 @@ def q_bm25f_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("term_score"),
         )
     )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(BM25_K)
-    )
+    return rounded_top_k(scored, BM25_K)
 
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import term_scores
 from searchengine_spark.index.queries import _INDEX_CTES, B, K1, _index
 
 EVAL_K = 10
@@ -85,16 +85,7 @@ def q_eval_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
 
     scored = (
-        matched.join(F.broadcast(idx.idf_values.select("word", "idf")), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "query_id",
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
-            ).alias("term_score"),
-        )
+        term_scores(idx, matched, idx.idf_values.select("word", "idf"))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("score"))
     )

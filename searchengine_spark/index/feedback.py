@@ -21,14 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import query_term_scores, term_scores
 from searchengine_spark.index.queries import (
     _INDEX_CTES,
     B,
     BM25_QUERY_TERMS,
     K1,
     _index,
-    q_bm25_scores,
+    rounded_top_k,
 )
 
 FB_K = 5       # feedback documents
@@ -40,12 +40,7 @@ def q_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir)
     terms = list(BM25_QUERY_TERMS)
 
-    fb = (
-        q_bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(FB_K)
-        .select("doc_id")
-    )
+    fb = rounded_top_k(query_term_scores(idx, terms), FB_K).select("doc_id")
     exp = (
         idx.term_frequencies.join(F.broadcast(fb), "doc_id")
         .filter(~F.col("word").isin(terms))
@@ -63,30 +58,12 @@ def q_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(t, 1.0) for t in terms], "word string, weight double"
     ).unionByName(exp)
 
-    scored = (
-        idx.term_frequencies.join(F.broadcast(qterms), "word")
-        .join(idx.idf_values.select("word", "idf"), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            (
-                bm25_term_score(
-                    F.col("term_freq"),
-                    F.col("doc_length"),
-                    F.col("avgdl"),
-                    F.col("idf"),
-                )
-                * F.col("weight")
-            ).alias("term_score"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    scored = term_scores(
+        idx,
+        idx.term_frequencies.join(F.broadcast(qterms), "word"),
+        idx.idf_values.select("word", "idf"),
+    ).select("doc_id", (F.col("term_score") * F.col("weight")).alias("term_score"))
+    return rounded_top_k(scored, 10)
 
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)

@@ -46,6 +46,8 @@ def ltr_features(
     frame. ``qterms`` must be broadcast-small (it is the query
     workload, not the corpus)."""
     nterms = qterms.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_terms"))
+    # Its own join, not bm25.term_scores: the features read term_freq,
+    # idf and doc_length beside the score.
     matched = (
         idx.term_frequencies.join(F.broadcast(qterms), "word")
         .join(F.broadcast(idx.idf_values.select("word", "idf")), "word")

@@ -38,33 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import query_term_scores
 from searchengine_spark.index.builder import InvertedIndex
+from searchengine_spark.index.queries import BM25_QUERY_TERMS, _index, rounded_top_k
 from searchengine_spark.io import check_top_k
 
 MAXSCORE_K = 10
 NEG_INF = -1.0e18
-
-
-def query_term_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
-    """(word, doc_id, s): every BM25 per-term contribution for the
-    query's terms — the frame every MaxScore stage slices."""
-    tf = index.term_frequencies.filter(F.col("word").isin(list(terms)))
-    idf = index.idf_values.filter(F.col("word").isin(list(terms))).select(
-        "word", "idf"
-    )
-    return (
-        tf.join(F.broadcast(idf), "word")
-        .join(index.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(index.scoring_params.select("avgdl")))
-        .select(
-            "word",
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
-            ).alias("s"),
-        )
-    )
 
 
 def maxscore_topk(
@@ -78,7 +58,7 @@ def maxscore_topk(
     """
     check_top_k(k)
     ts = query_term_scores(index, terms).cache()
-    ub = ts.groupBy("word").agg(F.round(F.max("s"), 6).alias("ub"))
+    ub = ts.groupBy("word").agg(F.round(F.max("term_score"), 6).alias("ub"))
     ow = Window.orderBy(F.desc("ub"), F.asc("word"))  # <= |terms| rows
     sw = ow.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     ordered = ub.select(
@@ -88,19 +68,10 @@ def maxscore_topk(
         F.row_number().over(ow).alias("pos"),
     )
     top1 = ordered.filter(F.col("pos") == 1).select("word")
-    p1 = (
-        ts.join(
-            ts.join(F.broadcast(top1), "word").select("doc_id").distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 6).alias("sc"))
-    )
+    top1_docs = ts.join(F.broadcast(top1), "word").select("doc_id").distinct()
     theta = (
-        p1.orderBy(F.desc("sc"), F.asc("doc_id"))
-        .limit(k)
-        .agg(F.min("sc").alias("_th"), F.count(F.lit(1)).alias("_c"))
+        rounded_top_k(ts.join(top1_docs, "doc_id", "left_semi"), k)
+        .agg(F.min("total_score").alias("_th"), F.count(F.lit(1)).alias("_c"))
         .select(
             F.when(F.col("_c") < F.lit(k), F.lit(NEG_INF))
             .otherwise(F.col("_th"))
@@ -120,13 +91,7 @@ def maxscore_topk(
     candidates = (
         ts.join(F.broadcast(essential), "word").select("doc_id").distinct()
     )
-    final = (
-        ts.join(candidates, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    final = rounded_top_k(ts.join(candidates, "doc_id", "left_semi"), k)
     n_ess = essential.agg(F.count(F.lit(1)).alias("n_essential_terms"))
     n_cand = candidates.agg(F.count(F.lit(1)).alias("n_candidates"))
     n_any = ts.agg(F.countDistinct("doc_id").alias("n_match_any"))
@@ -149,8 +114,6 @@ def maxscore_topk(
 
 
 def q_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from searchengine_spark.index.queries import BM25_QUERY_TERMS, _index
-
     return maxscore_topk(_index(spark, sf_dir), list(BM25_QUERY_TERMS))
 
 

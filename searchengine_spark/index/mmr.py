@@ -26,11 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.index.bm25 import query_term_scores
 from searchengine_spark.index.queries import (
     _INDEX_CTES,
+    BM25_QUERY_TERMS,
     BM25_SCORED_CTE,
-    q_bm25_scores,
     _index,
+    rounded_top_k,
 )
 
 MMR_K = 15       # BM25 candidates entering the re-rank
@@ -98,10 +100,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second time (collect() caches nothing) — one scoring pass
     # instead of two per query (r13 optimization, guide §1.2 step 1).
     cand_df = cut_lineage(
-        q_bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(MMR_K)
-        .select("doc_id", F.col("total_score").alias("rel"))
+        rounded_top_k(
+            query_term_scores(_index(spark, sf_dir), BM25_QUERY_TERMS), MMR_K
+        ).select("doc_id", F.col("total_score").alias("rel"))
     )
     cand = cand_df.collect()
     sims = {

@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.bm25 import bm25_term_score, search, tfidf_search
-from searchengine_spark.io import TESTDATA_DOC_VOCAB, load_table
+from searchengine_spark.index.bm25 import query_term_scores, search, tfidf_search
+from searchengine_spark.io import TESTDATA_DOC_VOCAB, check_top_k, load_table
 from searchengine_spark.text.porter import sql_stem_case_expr
 from searchengine_spark.text.tokenizer import sql_tokens_expr, tokenize_query
 
@@ -81,32 +81,14 @@ def q_scoring_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All docs matching >=1 query term, with full BM25 scores."""
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
-            ).alias("term_score"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("total_score")
-    )
+    return rounded_totals(query_term_scores(_index(spark, sf_dir), BM25_QUERY_TERMS))
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k of q_bm25_scores; ordered on the ROUNDED score so the
     cutoff is deterministic across engines."""
-    return (
-        q_bm25_scores(spark, sf_dir)
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(BM25_K)
+    return rounded_top_k(
+        query_term_scores(_index(spark, sf_dir), BM25_QUERY_TERMS), BM25_K
     )
 
 
@@ -198,6 +180,30 @@ scored AS (
   JOIN dl ON tf.doc_id = dl.doc_id
   WHERE tf.word IN ({_BM25_TERMS_SQL})
 )"""
+
+
+def rounded_totals(scores: DataFrame) -> DataFrame:
+    """(doc_id, total_score): (doc_id, term_score) rows summed per doc
+    and rounded to 6 places — the Spark side of the oracles'
+    ``round(sum(term_score), 6)`` over BM25_SCORED_CTE."""
+    return scores.groupBy("doc_id").agg(
+        F.round(F.sum("term_score"), 6).alias("total_score")
+    )
+
+
+def rounded_top_k(scores: DataFrame, k: int) -> DataFrame:
+    """Top-k of :func:`rounded_totals`, score desc, then doc_id asc.
+
+    Ranking the ROUNDED total makes the cutoff and the tie order
+    deterministic at display precision, whatever order a plan sums
+    in; ``bm25.top_k`` ranks the raw sum and keeps full precision."""
+    check_top_k(k)
+    return (
+        rounded_totals(scores)
+        .orderBy(F.desc("total_score"), F.asc("doc_id"))
+        .limit(k)
+    )
+
 
 _BM25_SCORES_SQL = f"""{_INDEX_CTES}{BM25_SCORED_CTE}
 SELECT doc_id, round(sum(term_score), 6) AS total_score
@@ -291,30 +297,11 @@ def q_bm25_okapi_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df+0.5)+1) — full score set for the benchmark terms, so the
     alternate idf/constants path is oracle-checked end-to-end, not
     just golden-tested."""
-    from searchengine_spark.index.bm25 import okapi_idf
-
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    idf = (
-        idx.idf_values.filter(F.col("word").isin(terms))
-        .crossJoin(F.broadcast(idx.scoring_params.select("n_docs")))
-        .select("word", okapi_idf(F.col("n_docs"), F.col("doc_freq")).alias("idf"))
-    )
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"),
-                F.col("idf"), k1=OKAPI_K1,
-            ).alias("term_score"),
+    return rounded_totals(
+        query_term_scores(
+            _index(spark, sf_dir), BM25_QUERY_TERMS,
+            idf_variant="okapi", k1=OKAPI_K1,
         )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("total_score")
     )
 
 
@@ -323,26 +310,11 @@ def q_bm25_rank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     +1 smoothing, negatives floored to eps*mean(raw idf over the full
     vocab), k1=1.5 — the published library algorithm, oracle-checked
     end-to-end (the ε-floor arithmetic included)."""
-    from searchengine_spark.index.bm25 import rank_bm25_idf_table
-
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    idf = rank_bm25_idf_table(idx).filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"),
-                F.col("idf"), k1=OKAPI_K1,
-            ).alias("term_score"),
+    return rounded_totals(
+        query_term_scores(
+            _index(spark, sf_dir), BM25_QUERY_TERMS,
+            idf_variant="rank_bm25", k1=OKAPI_K1,
         )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("total_score")
     )
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import term_scores
 
 # Keep postings within 70% of their term's best score: on the
 # fixture corpus this drops ~43% of postings for recall@10 = 0.8 — a
@@ -39,38 +39,25 @@ PRUNE_K = 10
 def q_static_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row audit: postings kept under tau-proportional pruning and
     top-k recall of the pruned index for the standard probe query."""
-    from searchengine_spark.index.queries import BM25_QUERY_TERMS, _index
+    from searchengine_spark.index.queries import (
+        BM25_QUERY_TERMS,
+        _index,
+        rounded_top_k,
+    )
 
     idx = _index(spark, sf_dir)
-    ts = (
-        idx.term_frequencies.join(
-            idx.idf_values.select("word", "idf"), "word"
-        )
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "word",
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-            ).alias("s"),
-        )
+    ts = term_scores(
+        idx, idx.term_frequencies, idx.idf_values.select("word", "idf")
     )
-    ub = ts.groupBy("word").agg(F.round(F.max("s"), 6).alias("ub"))
+    ub = ts.groupBy("word").agg(F.round(F.max("term_score"), 6).alias("ub"))
     kept = ts.join(ub, "word").filter(
-        F.round(F.col("s"), 6) >= F.round(F.lit(PRUNE_TAU) * F.col("ub"), 6)
+        F.round(F.col("term_score"), 6)
+        >= F.round(F.lit(PRUNE_TAU) * F.col("ub"), 6)
     )
 
     def topk(frame: DataFrame) -> DataFrame:
-        return (
-            frame.filter(F.col("word").isin(list(BM25_QUERY_TERMS)))
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("s"), 6).alias("sc"))
-            .orderBy(F.desc("sc"), F.asc("doc_id"))
-            .limit(PRUNE_K)
+        return rounded_top_k(
+            frame.filter(F.col("word").isin(list(BM25_QUERY_TERMS))), PRUNE_K
         )
 
     full_k = topk(ts)

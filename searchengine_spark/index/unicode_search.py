@@ -34,9 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import query_term_scores
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.queries import B, K1, index_body_sql
+from searchengine_spark.index.queries import B, K1, index_body_sql, rounded_top_k
 from searchengine_spark.io import load_table, session_cached
 from searchengine_spark.text.tokenizer import sql_tokens_expr, tokens_column
 
@@ -113,31 +113,8 @@ def q_bm25_topk_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k over the Unicode-tokenized index for a mixed-script
     query — end-to-end proof the whole index/scoring path (not just
     the splitter) is script-agnostic."""
-    idx = _uindex(spark, sf_dir)
-    terms = list(UNICODE_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(
-            F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))),
-            "word",
-        )
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-            ).alias("term_score"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(UNICODE_K)
+    return rounded_top_k(
+        query_term_scores(_uindex(spark, sf_dir), UNICODE_QUERY_TERMS), UNICODE_K
     )
 
 

@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import query_term_scores
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.queries import B, K1, index_body_sql
+from searchengine_spark.index.queries import B, K1, index_body_sql, rounded_top_k
 from searchengine_spark.index.unicode_search import (
     _UDOCS_CTES,
     _udocs,
@@ -158,31 +158,8 @@ def q_bm25_topk_cjk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k over the bigram-segmented index for a mixed
     CJK/Latin query — the retrieval path CJK text actually needs
     (whole-run tokens have no useful document frequency)."""
-    idx = _cjk_index(spark, sf_dir)
-    terms = cjk_bigram_query_terms(CJK_QUERY)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(
-            F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))),
-            "word",
-        )
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-            ).alias("term_score"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(CJK_K)
+    return rounded_top_k(
+        query_term_scores(_cjk_index(spark, sf_dir), cjk_bigram_query_terms(CJK_QUERY)), CJK_K
     )
 
 

@@ -43,9 +43,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import query_term_scores
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.queries import B, K1, index_body_sql
+from searchengine_spark.index.queries import B, K1, index_body_sql, rounded_top_k
 from searchengine_spark.io import (
     ensure_min_partitions,
     load_table,
@@ -444,31 +444,8 @@ def q_bm25_topk_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — the retrieval proof that one index serves every route:
     per-language stopword lists shaped the postings, and the CJK
     terms hit bigram vocabulary."""
-    idx = _ml_index(spark, sf_dir)
-    terms = routed_query_terms(ROUTED_QUERY)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(
-            F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))),
-            "word",
-        )
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-            ).alias("term_score"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(ROUTED_K)
+    return rounded_top_k(
+        query_term_scores(_ml_index(spark, sf_dir), routed_query_terms(ROUTED_QUERY)), ROUTED_K
     )
 
 

@@ -268,33 +268,11 @@ def q_bm25_topk_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup) is canonicalization-aware: decomposed-form documents match
     a composed-form query only because build_index(normalize=True)
     canonicalized them at ingest."""
-    from searchengine_spark.index.bm25 import bm25_term_score
+    from searchengine_spark.index.bm25 import query_term_scores
+    from searchengine_spark.index.queries import rounded_top_k
 
-    idx = _nfc_index(spark, sf_dir)
-    terms = list(NFC_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(
-            F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))),
-            "word",
-        )
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-            ).alias("term_score"),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
-        .orderBy(F.desc("total_score"), F.asc("doc_id"))
-        .limit(NFC_K)
+    return rounded_top_k(
+        query_term_scores(_nfc_index(spark, sf_dir), NFC_QUERY_TERMS), NFC_K
     )
 
 

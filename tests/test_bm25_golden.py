@@ -6,7 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import search
+from searchengine_spark.index.bm25 import bm25_term_score, search, term_scores
 from searchengine_spark.index.builder import build_index
 
 
@@ -66,6 +66,42 @@ def test_empty_and_unknown_queries(micro_index):
 
 def test_topk_limit(micro_index):
     assert search(micro_index, ["court"], k=2).count() == 2
+
+
+def test_term_scores_passes_query_columns_through(spark, micro_index):
+    # A batched/weighted caller joins (query_id, word, weight) onto tf;
+    # term_scores keeps those columns and scores each row as
+    # bm25_term_score does.
+    qterms = spark.createDataFrame(
+        [(1, "murder", 1.0), (2, "court", 0.5), (2, "appeal", 0.5)],
+        "query_id int, word string, weight double",
+    )
+    tf = micro_index.term_frequencies.join(F.broadcast(qterms), "word")
+    idf = micro_index.idf_values.select("word", "idf")
+    got = term_scores(micro_index, tf, idf)
+    assert got.columns == ["word", "doc_id", "query_id", "weight", "term_score"]
+    expected = (
+        tf.join(idf, "word")
+        .join(micro_index.doc_lengths, "doc_id")
+        .crossJoin(micro_index.scoring_params.select("avgdl"))
+        .select(
+            "query_id", "word", "doc_id", "weight",
+            bm25_term_score(
+                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
+            ).alias("expected"),
+        )
+    )
+    rows = {
+        (r.query_id, r.word, r.doc_id): (r.weight, r.term_score)
+        for r in got.collect()
+    }
+    want = {
+        (r.query_id, r.word, r.doc_id): (r.weight, r.expected)
+        for r in expected.collect()
+    }
+    assert len(rows) == 8 and rows == want
+    plain = term_scores(micro_index, micro_index.term_frequencies, idf)
+    assert plain.columns == ["word", "doc_id", "term_score"]
 
 
 def test_tfidf_variant(micro_index):
@@ -168,7 +204,7 @@ def test_rank_bm25_epsilon_floor_golden(spark):
 
     from pyspark.sql import functions as F
 
-    from searchengine_spark.index.bm25 import search
+    from searchengine_spark.index.bm25 import bm25_term_score, search, term_scores
     from searchengine_spark.index.builder import build_index
 
     corpus = {

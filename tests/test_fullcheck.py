@@ -16,6 +16,7 @@ build sessions).
 from __future__ import annotations
 
 import glob
+import importlib.util
 import json
 import os
 import re
@@ -66,3 +67,29 @@ def test_every_registry_query_swept():
         if n in oracles and r.get("status") == "rows_only"
     )
     assert not weak, f"oracle-bearing queries swept rows-only: {weak}"
+
+
+def test_partial_sweep_merges_into_latest_fullcheck(tmp_path):
+    """``full_parity.py --only`` without ``--round`` must write into
+    the latest existing FULLCHECK, not open a new, partial latest file
+    that the test above would then read."""
+    spec = importlib.util.spec_from_file_location(
+        "full_parity", os.path.join(REPO, "scripts", "full_parity.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    for name in (
+        "CORRECTNESS_r13.json",
+        "CORRECTNESS_r14.json",
+        "FULLCHECK_r12.json",
+        "FULLCHECK_r13.json",
+        "FULLCHECK_r13_sf0.1_touched.json",
+    ):
+        (tmp_path / name).write_text("{}")
+    root = str(tmp_path)
+    assert mod.output_round(root, None, partial=True) == 13
+    assert mod.output_round(root, None, partial=False) == 15
+    assert mod.output_round(root, 7, partial=True) == 7
+    (tmp_path / "FULLCHECK_r13.json").unlink()
+    (tmp_path / "FULLCHECK_r12.json").unlink()
+    assert mod.output_round(root, None, partial=True) == 15
