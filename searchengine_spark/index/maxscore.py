@@ -57,7 +57,10 @@ def maxscore_topk(
     (n_candidates < n_match_any) while the rows prove it stayed exact.
     """
     check_top_k(k)
-    ts = query_term_scores(index, terms).cache()
+    # Not cached: a public operator returns a lazy plan, and a cached
+    # ts would outlive the call and serve later BM25 queries over the
+    # same terms.
+    ts = query_term_scores(index, terms)
     ub = ts.groupBy("word").agg(F.round(F.max("term_score"), 6).alias("ub"))
     ow = Window.orderBy(F.desc("ub"), F.asc("word"))  # <= |terms| rows
     sw = ow.rowsBetween(Window.currentRow, Window.unboundedFollowing)

@@ -13,28 +13,36 @@ and/or a terminal REPL.
 Spark builds one in-memory serving shard (ServingShard), once, from
 bm25.term_scores (each posting's BM25 contribution — the one BM25
 formula), bm25.snippet_table and the index's (word, doc_freq)
-vocabulary, pulled over Arrow into per-term (doc_ids, scores) numpy
-arrays, a doc_id -> snippet dict, and the vocabulary with a
-per-word letter-count matrix. The first request that needs the shard
-builds it, under a lock; start-up does not (see __init__).
+vocabulary, pulled over Arrow into per-term (doc position, score)
+numpy arrays over one sorted doc_id array, a doc_id -> snippet dict,
+and the vocabulary ordered by word length, with each word's clamped
+letter counts and letter mask. The first request that needs the
+shard builds it, under a lock; start-up does not (see __init__).
 
 A warm /search runs no Spark job: tokenize, sum the distinct query
-terms' scores per doc, take the top-k by (score desc, doc_id asc),
-then highlight each hit's snippet with the pattern bm25.highlight
-uses. Fuzzy mode first replaces each unknown term by its closest
-vocabulary word, as phrase.correct_terms does. The Spark functions
-stay the parity reference (tests/test_serve.py). /similar still runs
-its cosine list in Spark over the cached embeddings.
+terms' scores into a doc-indexed array, take the top-k by (score
+desc, doc_id asc) with a partition at the k-th score, then highlight
+each hit's snippet with the pattern bm25.highlight uses. Fuzzy mode
+first replaces each unknown term by its closest vocabulary word, as
+phrase.correct_terms does, running Levenshtein only on the words that
+a length window, the letter masks and the bag distance leave. The
+Spark functions stay the parity reference (tests/test_serve.py).
+/similar still runs its cosine list in Spark over the cached
+embeddings. make_http_server answers from a fixed pool of handler
+threads and reports each /search phase's seconds in /metrics.
 
 Measured on the perfbench search_http corpus (seed 1, 10k docs, 4-CPU
-VM): the shard holds 352,555 postings over 24,673 terms, 7.9 MB of
-arrays (5.4 MB of postings, the rest the letter counts). The first
-request builds it in ~7 s, most of that Spark computing the three
-tables. Over ten runs, a warm request's p50 from one client fell
-from 0.254 s (2.27 Spark jobs a request, driver time dominated by
-planning and scheduling them) to 0.0019 s, and four clients' replies
-rose from 8.8/s to 430/s. Warm fuzzy requests took ~14 ms at the
-median over queries whose every term needed correcting.
+VM): the shard holds 352,555 postings over 24,673 terms, 6.2 MB of
+arrays (5.4 MB of postings, the rest the vocabulary's letter counts
+and masks). The first request builds it in ~7-12 s, most of that
+Spark computing the three tables; the doc positions and letter masks
+add ~50 ms. Serving from the shard instead of Spark jobs took a warm
+request's p50 from one client from 0.254 s to ~2 ms. The handler
+pool, the sort-free top-k and the pre-filtered fuzzy lookup then took
+it from 2.32 to 1.64 ms (medians of ten alternating runs each), and
+four clients' replies from 374/s to 452/s. In process
+(scripts/serve_replay.py, 4,000 requests), a fuzzy request's p50
+fell from 7.4 to 1.9 ms.
 
 Scale shape (not built): the build hash-shards the term scores by
 doc_id into S serving processes, one shard each; the exact global
@@ -53,8 +61,10 @@ from __future__ import annotations
 
 import bisect
 import json
+import queue
 import threading
 import time
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from typing import Any
 
 import numpy as np
@@ -75,32 +85,54 @@ LATENCY_BUCKETS_S = (
     0.001, 0.0025, 0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0
 )
 
+# Handler threads of the HTTP server's pool (make_http_server): a warm
+# /search holds the GIL for all but its socket I/O, so a few threads
+# per CPU keep every CPU busy; a /similar waiting on Spark holds one.
+HTTP_HANDLER_THREADS = 8
+
 # Letter-count columns of the fuzzy pre-filter: a-z, then one for
-# every other character (merging characters keeps the bound below).
+# every other character (merging characters keeps the bounds below).
 _N_LETTERS = 27
 
+# Set bits of every 16-bit value, for the letter-mask popcount.
+_POPCOUNT16 = np.unpackbits(
+    np.arange(1 << 16, dtype=">u2").view(np.uint8)
+).reshape(-1, 16).sum(1, dtype=np.uint8)
 
-def _letter_counts(words: list[str]) -> np.ndarray:
-    """(len(words), _N_LETTERS) int32 counts of each word's letters."""
+
+def _letter_profile(words: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Each word's letter counts, clamped to MAX_EDIT_DISTANCE + 1, as
+    a (len(words), _N_LETTERS) int8 matrix, and the mask of the
+    letters it holds, as uint32."""
     lengths = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
     cps = np.frombuffer("".join(words).encode("utf-32-le"), dtype=np.uint32)
     cols = np.where((cps >= 97) & (cps <= 122), cps - 97, _N_LETTERS - 1)
     rows = np.repeat(np.arange(len(words)), lengths)
     counts = np.bincount(
         rows * _N_LETTERS + cols, minlength=len(words) * _N_LETTERS
+    ).reshape(len(words), _N_LETTERS)
+    masks = (counts > 0) @ (np.int64(1) << np.arange(_N_LETTERS))
+    return (
+        np.minimum(counts, MAX_EDIT_DISTANCE + 1).astype(np.int8),
+        masks.astype(np.uint32),
     )
-    return counts.reshape(len(words), _N_LETTERS).astype(np.int32)
 
 
-def _levenshtein(a: str, b: str) -> int:
-    """Edit distance over code points, as Spark's levenshtein counts."""
+def _levenshtein(a: str, b: str, limit: int) -> int:
+    """Edit distance over code points, as Spark's levenshtein counts;
+    any distance above ``limit`` comes back as ``limit + 1``."""
+    if abs(len(a) - len(b)) > limit:
+        return limit + 1
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
         for j, cb in enumerate(b, 1):
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        # a row's minimum never falls in later rows
+        if min(cur) > limit:
+            return limit + 1
         prev = cur
-    return prev[-1]
+    return min(prev[-1], limit + 1)
 
 
 class ServingShard:
@@ -117,17 +149,22 @@ class ServingShard:
         t0 = time.perf_counter()
         ts = term_scores.toArrow()
         self.doc_id_type = term_scores.schema["doc_id"].dataType
+        # Each posting points at its doc's position in the sorted
+        # doc_ids, so top_k sums into a dense array instead of sorting.
+        self._doc_ids, pos = np.unique(
+            ts.column("doc_id").to_numpy(), return_inverse=True
+        )
         # Group the postings by term: sort by the term's dictionary
         # code, then slice. Each term's arrays are views of two arrays.
         words = ts.column("word").combine_chunks().dictionary_encode()
         codes = words.indices.to_numpy()
         order = np.argsort(codes, kind="stable")
-        self._ids = ts.column("doc_id").to_numpy()[order]
+        self._pos = pos[order]
         self._scores = ts.column("term_score").to_numpy()[order]
         ends = np.cumsum(np.bincount(codes, minlength=len(words.dictionary)))
         starts = np.concatenate(([0], ends[:-1]))
         self._postings = {
-            w: (self._ids[a:b], self._scores[a:b])
+            w: (self._pos[a:b], self._scores[a:b])
             for w, a, b in zip(
                 words.dictionary.to_pylist(), starts.tolist(), ends.tolist()
             )
@@ -136,17 +173,27 @@ class ServingShard:
         self.snippets: dict[Any, str | None] = dict(
             zip(snip.column("doc_id").to_pylist(), snip.column("snippet").to_pylist())
         )
+        # The vocabulary ordered by word length, so that the words a
+        # term's fuzzy lookup may reach are one slice.
         voc = vocabulary.toArrow()
-        self._words: list[str] = voc.column("word").to_pylist()
-        self._doc_freq: list[int] = voc.column("doc_freq").to_pylist()
+        vwords = voc.column("word").to_pylist()
+        vfreq = voc.column("doc_freq").to_pylist()
+        lengths = np.fromiter(map(len, vwords), dtype=np.int64, count=len(vwords))
+        by_len = np.argsort(lengths, kind="stable")
+        self._lengths = lengths[by_len]
+        self._words: list[str] = [vwords[i] for i in by_len.tolist()]
+        self._doc_freq: list[int] = [vfreq[i] for i in by_len.tolist()]
         self._known = set(self._words)
-        self._letters = _letter_counts(self._words)
+        self._letters, self._masks = _letter_profile(self._words)
         self.build_s = time.perf_counter() - t0
 
     def shape(self) -> dict[str, Any]:
-        nbytes = self._ids.nbytes + self._scores.nbytes + self._letters.nbytes
+        nbytes = sum(
+            a.nbytes
+            for a in (self._doc_ids, self._pos, self._scores, self._letters, self._masks)
+        )
         return {
-            "postings": len(self._ids),
+            "postings": len(self._pos),
             "terms": len(self._postings),
             "mb": round(nbytes / 2**20, 3),
             "build_s": round(self.build_s, 3),
@@ -162,14 +209,26 @@ class ServingShard:
         hit = [self._postings[t] for t in dict.fromkeys(terms) if t in self._postings]
         if not hit:
             return []
-        ids, inverse = np.unique(
-            np.concatenate([h[0] for h in hit]), return_inverse=True
+        pos = np.concatenate([h[0] for h in hit])
+        n_docs = len(self._doc_ids)
+        sums = np.bincount(
+            pos, weights=np.concatenate([h[1] for h in hit]), minlength=n_docs
         )
-        sums = np.bincount(inverse, weights=np.concatenate([h[1] for h in hit]))
-        # ids is ascending, so a stable sort on -score breaks ties by
+        # A doc is a hit when a posting touched it, whatever its sum.
+        touched = np.zeros(n_docs, dtype=bool)
+        touched[pos] = True
+        docs = np.flatnonzero(touched)
+        scores = sums[docs]
+        if len(docs) > k:
+            # Every doc above the k-th score is in; of those tied with
+            # it, the sort below keeps the smallest doc_ids.
+            kth = np.partition(scores, len(docs) - k)[len(docs) - k]
+            keep = scores >= kth
+            docs, scores = docs[keep], scores[keep]
+        # docs is ascending, so a stable sort on -score breaks ties by
         # doc_id
-        top = np.argsort(-sums, kind="stable")[:k]
-        return list(zip(ids[top].tolist(), sums[top].tolist()))
+        top = np.argsort(-scores, kind="stable")[:k]
+        return list(zip(self._doc_ids[docs[top]].tolist(), scores[top].tolist()))
 
     def correct(self, terms: list[str]) -> list[str]:
         """phrase.correct_terms' terms to search: each term missing
@@ -184,15 +243,25 @@ class ServingShard:
         return out
 
     def _suggest(self, term: str) -> str | None:
-        # Bag distance (the larger of the letters only one side has)
-        # is a lower bound on edit distance and implies |len diff| <=
-        # it, so only the words it passes need an exact Levenshtein.
-        diff = self._letters - _letter_counts([term])[0]
+        # Lower bounds on edit distance, cheapest first, so that only
+        # the words all of them pass need an exact Levenshtein. An edit
+        # changes the length by at most 1, and adds or removes at most
+        # 2 of the letters a word holds. The bag distance (the larger
+        # of the letter counts only one side has) stays a lower bound
+        # when both sides' counts are clamped alike.
+        n = len(term)
+        lo = int(np.searchsorted(self._lengths, n - MAX_EDIT_DISTANCE, side="left"))
+        hi = int(np.searchsorted(self._lengths, n + MAX_EDIT_DISTANCE, side="right"))
+        letters, mask = _letter_profile([term])
+        xor = self._masks[lo:hi] ^ mask[0]
+        differ = _POPCOUNT16[xor & 0xFFFF] + _POPCOUNT16[xor >> 16]
+        rows = lo + np.flatnonzero(differ <= 2 * MAX_EDIT_DISTANCE)
+        diff = self._letters[rows] - letters[0]
         bag = np.maximum(np.maximum(diff, 0).sum(1), np.maximum(-diff, 0).sum(1))
         keys = []
-        for i in np.flatnonzero(bag <= MAX_EDIT_DISTANCE).tolist():
+        for i in rows[bag <= MAX_EDIT_DISTANCE].tolist():
             word = self._words[i]
-            d = _levenshtein(term, word)
+            d = _levenshtein(term, word, MAX_EDIT_DISTANCE)
             if d <= MAX_EDIT_DISTANCE:
                 keys.append((d, -self._doc_freq[i], word))
         return min(keys)[2] if keys else None
@@ -282,17 +351,28 @@ class SearchService:
         return shard.shape()
 
     def query(
-        self, q: str, k: int = 10, *, fuzzy: bool = False
+        self,
+        q: str,
+        k: int = 10,
+        *,
+        fuzzy: bool = False,
+        phases: Phases | None = None,
     ) -> list[dict[str, Any]]:
         """Top-k hits with highlighted snippets, as plain dicts.
 
         ``fuzzy``: query terms missing from the vocabulary are
         replaced by their closest in-vocabulary suggestion (distance
         then doc_freq) before scoring — typo tolerance the reference
-        lacks (its unknown terms silently contribute nothing)."""
+        lacks (its unknown terms silently contribute nothing).
+
+        ``phases``: if given, the request's parse, correct, top_k and
+        highlight seconds are added to it. The first request's shard
+        build is in none of them (shard_shape reports it)."""
         from searchengine_spark.index.bm25 import highlight_text
         from searchengine_spark.text.tokenizer import tokenize_query
 
+        if phases is None:
+            phases = Phases()
         highlight_terms = [q]
         if self._multilingual:
             if fuzzy:
@@ -310,7 +390,9 @@ class SearchService:
             highlight_terms = terms
         else:
             terms = tokenize_query(q, stem=self._stem)
+        phases.lap("parse")
         shard = self._serving_shard()
+        phases.restart()
         if fuzzy and terms:
             terms = shard.correct(terms)
             # Highlight the terms actually SEARCHED, each on its own:
@@ -318,16 +400,21 @@ class SearchService:
             # ('Sparkk' vs the lowercased correction key) and corrupt
             # words that merely contain the typo as a substring.
             highlight_terms = terms
+            phases.lap("correct")
         if not terms:
             return []
-        return [
+        ranked = shard.top_k(terms, k)
+        phases.lap("top_k")
+        hits = [
             {
                 "doc_id": d,
                 "total_score": round(s, 6),
                 "snippet": highlight_text(shard.snippets.get(d), highlight_terms),
             }
-            for d, s in shard.top_k(terms, k)
+            for d, s in ranked
         ]
+        phases.lap("highlight")
+        return hits
 
     def similar(
         self, doc_id: int, q: str | None = None, k: int = 10
@@ -383,6 +470,24 @@ class SearchService:
         ]
 
 
+class Phases(dict):
+    """Seconds spent in each named phase of one request. ``lap(name)``
+    adds the time since the last lap (or restart) to ``name``."""
+
+    def __init__(self, start: float | None = None) -> None:
+        super().__init__()
+        self._t = time.perf_counter() if start is None else start
+
+    def lap(self, name: str) -> None:
+        t = time.perf_counter()
+        self[name] = self.get(name, 0.0) + (t - self._t)
+        self._t = t
+
+    def restart(self) -> None:
+        """Leave the time since the last lap out of every phase."""
+        self._t = time.perf_counter()
+
+
 class RequestMetrics:
     """Request and error counts and a latency histogram per endpoint
     (a fuzzy /search is its own endpoint), served by GET /metrics.
@@ -392,7 +497,9 @@ class RequestMetrics:
         self._lock = threading.Lock()
         self._endpoints: dict[str, dict[str, Any]] = {}
 
-    def record(self, endpoint: str, status: int, seconds: float) -> None:
+    def record(
+        self, endpoint: str, status: int, seconds: float, phases: dict[str, float]
+    ) -> None:
         bucket = bisect.bisect_left(LATENCY_BUCKETS_S, seconds)
         with self._lock:
             m = self._endpoints.get(endpoint)
@@ -402,16 +509,24 @@ class RequestMetrics:
                     "errors": 0,
                     "latency_s_sum": 0.0,
                     "latency_hist": [0] * (len(LATENCY_BUCKETS_S) + 1),
+                    "phase_s_sum": {},
                 }
             m["requests"] += 1
             m["errors"] += status >= 400
             m["latency_s_sum"] += seconds
             m["latency_hist"][bucket] += 1
+            sums = m["phase_s_sum"]
+            for name, s in phases.items():
+                sums[name] = sums.get(name, 0.0) + s
 
     def snapshot(self) -> dict[str, dict[str, Any]]:
         with self._lock:
             return {
-                e: {**m, "latency_hist": list(m["latency_hist"])}
+                e: {
+                    **m,
+                    "latency_hist": list(m["latency_hist"]),
+                    "phase_s_sum": dict(m["phase_s_sum"]),
+                }
                 for e, m in self._endpoints.items()
             }
 
@@ -438,25 +553,83 @@ def _fuzzy_param(params: dict) -> bool:
     return (params.get("fuzzy") or ["0"])[0] in ("1", "true", "yes")
 
 
-def make_http_server(service: SearchService, port: int = 0):
-    """stdlib ThreadingHTTPServer: GET /search?q=...&k=10 -> JSON hits;
-    GET /similar?doc_id=... -> JSON neighbors; GET /metrics -> JSON
-    counters; GET /healthz -> ok. Returns the (not yet serving) server
-    object so callers control the serve_forever lifecycle (tests run
-    it in a thread; __main__ blocks on it)."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+class _PooledHTTPServer(HTTPServer):
+    """An HTTPServer that hands each accepted connection, through a
+    queue, to one of HTTP_HANDLER_THREADS threads started with it,
+    instead of starting a thread per connection. server_close() stops
+    them once the connections already queued are answered."""
+
+    # listen backlog; the stdlib default is 5
+    request_queue_size = HTTP_HANDLER_THREADS
+
+    def __init__(self, address: tuple[str, int], handler: type) -> None:
+        super().__init__(address, handler)
+        self._work: queue.SimpleQueue = queue.SimpleQueue()
+        self._picked = threading.local()
+        self._pool = [
+            threading.Thread(target=self._handle_loop, name=f"serve-http-{i}", daemon=True)
+            for i in range(HTTP_HANDLER_THREADS)
+        ]
+        for t in self._pool:
+            t.start()
+
+    def process_request(self, request, client_address) -> None:
+        self._work.put((request, client_address, time.perf_counter()))
+
+    def _handle_loop(self) -> None:
+        while (item := self._work.get()) is not None:
+            request, client_address, queued = item
+            self._picked.times = (queued, time.perf_counter())
+            try:
+                self.finish_request(request, client_address)
+            except Exception:  # noqa: BLE001 — as socketserver handles it
+                self.handle_error(request, client_address)
+            finally:
+                self.shutdown_request(request)
+
+    def pickup(self) -> tuple[float, float]:
+        """(queued, picked up): perf_counter times at which the
+        connection this thread handles was accepted and taken."""
+        return self._picked.times
+
+    def server_close(self) -> None:
+        super().server_close()
+        for _ in self._pool:
+            self._work.put(None)
+        for t in self._pool:
+            t.join()
+
+
+def make_http_server(service: SearchService, port: int = 0) -> _PooledHTTPServer:
+    """GET /search?q=...&k=10 -> JSON hits; GET /similar?doc_id=... ->
+    JSON neighbors; GET /metrics -> JSON counters; GET /healthz -> ok.
+
+    Connections are answered by a fixed pool of HTTP_HANDLER_THREADS
+    threads, fed from a queue by the accept loop, with a listen
+    backlog of the same size; a connection beyond that waits in the
+    queue. Replies are HTTP/1.0, closing the connection, so an idle
+    client never holds a handler thread. Returns the (not yet serving)
+    server object so callers control the serve_forever lifecycle
+    (tests run it in a thread; __main__ blocks on it); shutdown() stops
+    the accept loop, and server_close() then stops the pool.
+
+    /metrics sums each endpoint's seconds per phase: queue_wait
+    (accepted to picked up by a handler thread), parse (request line,
+    headers, parameters and query terms), correct, top_k and highlight
+    (a /search), and serialize (JSON encode and send)."""
     from urllib.parse import parse_qs, urlparse
 
     metrics = RequestMetrics()
 
-    def search(params: dict) -> tuple[int, dict]:
+    def search(params: dict, phases: Phases) -> tuple[int, dict]:
         q = (params.get("q") or [""])[0]
         k = _k_param(params)
         if not q:
             raise _BadRequest("missing query parameter q")
-        return 200, {"query": q, "results": service.query(q, k=k, fuzzy=_fuzzy_param(params))}
+        hits = service.query(q, k=k, fuzzy=_fuzzy_param(params), phases=phases)
+        return 200, {"query": q, "results": hits}
 
-    def similar(params: dict) -> tuple[int, dict]:
+    def similar(params: dict, phases: Phases) -> tuple[int, dict]:
         doc_id = _int_param(params, "doc_id")
         k = _k_param(params)
         q = (params.get("q") or [None])[0]
@@ -468,8 +641,8 @@ def make_http_server(service: SearchService, port: int = 0):
             return 404, {"error": str(exc)[:300]}
 
     routes = {
-        "/healthz": lambda params: (200, {"status": "ok"}),
-        "/metrics": lambda params: (
+        "/healthz": lambda params, phases: (200, {"status": "ok"}),
+        "/metrics": lambda params, phases: (
             200,
             {
                 "latency_buckets_s": list(LATENCY_BUCKETS_S),
@@ -482,17 +655,25 @@ def make_http_server(service: SearchService, port: int = 0):
     }
 
     class Handler(BaseHTTPRequestHandler):
+        # one request per connection (the BaseHTTPRequestHandler
+        # default, kept on purpose: see make_http_server)
+        protocol_version = "HTTP/1.0"
+
         def do_GET(self) -> None:  # noqa: N802 — http.server API
             t0 = time.perf_counter()
+            queued, picked = self.server.pickup()
+            phases = Phases(start=picked)
+            phases["queue_wait"] = picked - queued
             url = urlparse(self.path)
             params = parse_qs(url.query)
             route = routes.get(url.path)
             endpoint = url.path if route else "other"
             if url.path == "/search" and _fuzzy_param(params):
                 endpoint = "/search?fuzzy=1"
+            phases.lap("parse")
             try:
                 code, payload = (
-                    route(params)
+                    route(params, phases)
                     if route
                     else (404, {"error": "unknown path; use /search?q=..., "
                                 "/similar?doc_id=..., /metrics or /healthz"})
@@ -501,8 +682,10 @@ def make_http_server(service: SearchService, port: int = 0):
                 code, payload = 400, {"error": str(exc)}
             except Exception as exc:  # noqa: BLE001 — a failing request must not kill the server
                 code, payload = 500, {"error": f"{type(exc).__name__}: {exc}"[:300]}
+            phases.restart()
             self._reply(code, payload)
-            metrics.record(endpoint, code, time.perf_counter() - t0)
+            phases.lap("serialize")
+            metrics.record(endpoint, code, time.perf_counter() - t0, phases)
 
         def _reply(self, code: int, payload: dict) -> None:
             body = json.dumps(payload).encode()
@@ -515,7 +698,7 @@ def make_http_server(service: SearchService, port: int = 0):
         def log_message(self, *args) -> None:  # quiet test output
             pass
 
-    return ThreadingHTTPServer(("127.0.0.1", port), Handler)
+    return _PooledHTTPServer(("127.0.0.1", port), Handler)
 
 
 def repl(service: SearchService) -> None:

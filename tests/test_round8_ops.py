@@ -228,6 +228,29 @@ def test_maxscore_safe_when_fewer_than_k_matches(spark):
     assert out[0].n_essential_terms == 2  # nothing prunable below -inf
 
 
+def test_maxscore_topk_caches_nothing(spark):
+    """maxscore_topk returns a lazy plan: running it leaves no cached
+    frame behind for later queries to read."""
+    from searchengine_spark.index.bm25 import query_term_scores
+    from searchengine_spark.index.builder import build_index
+    from searchengine_spark.index.maxscore import maxscore_topk
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma delta"), (3, "alpha delta")],
+        "doc_id long, text string",
+    )
+    idx = build_index(docs)
+    query_term_scores(idx, ["alpha", "beta"]).collect()  # warms the index
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    for terms in (["alpha", "gamma"], ["beta", "delta"]):
+        assert maxscore_topk(idx, terms, k=2).collect()
+    assert stored() <= before
+
+
 def test_maxscore_oracle(spark, sf_dir):
     assert_matches_oracle(
         QUERIES["se_maxscore_topk"](spark, sf_dir),

@@ -435,6 +435,209 @@ def test_metrics_endpoint_counts_requests_and_shard(service):
         assert len(v["latency_hist"]) == len(LATENCY_BUCKETS_S) + 1
         assert sum(v["latency_hist"]) == v["requests"]
         assert v["latency_s_sum"] > 0
+        assert {"queue_wait", "parse", "serialize"} <= set(v["phase_s_sum"])
+    assert set(ep["/search"]["phase_s_sum"]) == {
+        "queue_wait", "parse", "top_k", "highlight", "serialize"
+    }
+    assert set(ep["/search?fuzzy=1"]["phase_s_sum"]) == {
+        "queue_wait", "parse", "correct", "top_k", "highlight", "serialize"
+    }
     shard = m["shard"]
     assert shard["postings"] > 0 and shard["terms"] > 0 and shard["mb"] > 0
     assert shard["build_s"] is not None
+
+
+def _edit_distance(a, b):
+    """Full Levenshtein, with no cut-off: the reference the shard's
+    pre-filtered lookup must agree with."""
+    row = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        diag, row[0] = row[0], i
+        for j, cb in enumerate(b, 1):
+            diag, row[j] = row[j], min(row[j] + 1, row[j - 1] + 1, diag + (ca != cb))
+    return row[-1]
+
+
+def _brute_force_correct(vocab, terms, limit=2):
+    """correct over the whole vocabulary: each unknown term becomes the
+    word of lowest (distance, -doc_freq, word) within ``limit``."""
+    known = {w for w, _ in vocab}
+    out = []
+    for t in terms:
+        if t in known:
+            out.append(t)
+            continue
+        keys = [(d, -f, w) for w, f in vocab if (d := _edit_distance(t, w)) <= limit]
+        if keys:
+            out.append(min(keys)[2])
+    return out
+
+
+def _typos(rng, words, n):
+    """``n`` misspellings of ``words``: one to three random inserts,
+    deletes, substitutions, swaps or doubled letters, some outside a-z."""
+    alphabet = "abcdefghijklmnopqrstuvwxyzéß"
+    out = []
+    for _ in range(n):
+        w = list(rng.choice(words))
+        for _ in range(rng.randint(1, 3)):
+            i = rng.randrange(len(w) + 1)
+            op = rng.choice(("ins", "del", "sub", "swap", "double"))
+            if op == "ins" or not w:
+                w.insert(i, rng.choice(alphabet))
+            elif op == "del":
+                del w[min(i, len(w) - 1)]
+            elif op == "sub":
+                w[min(i, len(w) - 1)] = rng.choice(alphabet)
+            elif op == "swap" and len(w) > 1:
+                i = min(i, len(w) - 2)
+                w[i], w[i + 1] = w[i + 1], w[i]
+            else:
+                i = min(i, len(w) - 1)
+                w.insert(i, w[i])
+        out.append("".join(w) or "q")
+    return out
+
+
+def test_fuzzy_correction_matches_brute_force_levenshtein(spark, index):
+    """The shard's length window, letter masks and bag distance only
+    narrow the words it compares; the correction must equal a full
+    Levenshtein over the whole vocabulary, at the edges of each bound."""
+    import random
+
+    from searchengine_spark.serve import ServingShard
+
+    rng = random.Random(7)
+    fixture = sorted(tuple(r) for r in index.idf_values.select("word", "doc_freq").collect())
+    vocab = rng.sample(fixture, min(800, len(fixture)))
+    edges = [
+        ("abcdefgh", 4),      # 8 letters: terms of 6 and 10 sit on the window's edges
+        ("abcd", 3),          # abxy: 2 substitutions, 4 letters differ
+        ("aaaaaa", 2),        # repeated letters past the count clamp
+        ("bookkeeper", 2),
+        ("mississippi", 2),
+        ("naïve", 3),         # characters outside a-z
+        ("straße", 2),
+        ("café", 2),
+        ("zzzy", 2),          # a doc_freq tie with zzzx
+        ("zzzx", 2),
+    ]
+    vocab += edges
+    terms = [
+        "abcdef", "abcdefghij", "abcde", "abcdefghijk",
+        "abxy", "axyz", "aaaa", "aaaaaaaa", "aaaaaaaaa", "a",
+        "bokeeper", "bookkeeeper", "misisipi", "mississipi",
+        "naive", "naïvé", "strasse", "strae", "cafe", "cfé",
+        "zzz", "zzzz", "zzzxy",
+    ]
+    terms += _typos(rng, [w for w, _ in vocab], 250)
+    shard = ServingShard(
+        spark.createDataFrame([], "word string, doc_id long, term_score double"),
+        spark.createDataFrame([], "doc_id long, snippet string"),
+        spark.createDataFrame(vocab, "word string, doc_freq long"),
+    )
+    want = _brute_force_correct(vocab, terms)
+    assert want.count("abcdefgh") >= 2  # both window edges reach it
+    assert shard.correct(terms) == want
+    for t in terms:
+        assert shard.correct([t]) == _brute_force_correct(vocab, [t]), t
+
+
+def test_shard_top_k_selects_exact_ties_at_the_kth_place(spark):
+    """Docs tied with the k-th score are cut by doc_id; every touched
+    doc, even at score 0 or below, is a hit, and an untouched doc
+    never is, whatever k."""
+    from searchengine_spark.serve import ServingShard
+
+    postings = [
+        ("a", 9, 1.0), ("a", 5, 1.0), ("a", 3, 1.0), ("a", 1, 1.0), ("a", 7, 1.0),
+        ("b", 9, 1.0), ("b", 7, 0.5), ("b", 1, 0.5), ("b", 5, 0.5), ("b", 3, 0.5),
+        ("b", 2, 0.5), ("b", 4, 0.0), ("b", 6, -0.25), ("b", 8, 0.5),
+        ("c", 10, 1.0), ("c", 11, 2.0),
+    ]
+    shard = ServingShard(
+        spark.createDataFrame(postings, "word string, doc_id long, term_score double"),
+        spark.createDataFrame([], "doc_id long, snippet string"),
+        spark.createDataFrame([], "word string, doc_freq long"),
+    )
+    sums = {}
+    for w, d, s in postings:
+        if w in ("a", "b"):
+            sums[d] = sums.get(d, 0.0) + s
+    ranked = sorted(sums.items(), key=lambda h: (-h[1], h[0]))
+    assert ranked[:5] == [(9, 2.0), (1, 1.5), (3, 1.5), (5, 1.5), (7, 1.5)]
+    for k in range(1, 13):
+        assert shard.top_k(["a", "b", "b"], k) == ranked[:k], k
+    assert shard.top_k(["b"], 3) == [(9, 1.0), (1, 0.5), (2, 0.5)]
+    assert shard.top_k(["c", "zzz"], 5) == [(11, 2.0), (10, 1.0)]
+    assert shard.top_k(["zzz"], 5) == []
+
+
+class _SlowService:
+    """A stand-in SearchService whose /search takes a while, recording
+    the threads that answer it and how many answer at once."""
+
+    def __init__(self, seconds):
+        self.seconds = seconds
+        self.lock = threading.Lock()
+        self.threads = set()
+        self.active = self.most_active = 0
+
+    def query(self, q, k=10, *, fuzzy=False, phases=None):
+        import time
+
+        with self.lock:
+            self.threads.add(threading.current_thread())
+            self.active += 1
+            self.most_active = max(self.most_active, self.active)
+        time.sleep(self.seconds)
+        with self.lock:
+            self.active -= 1
+        return [{"doc_id": 1, "total_score": 1.0, "snippet": q}]
+
+    def shard_shape(self):
+        return {}
+
+
+def test_handler_pool_answers_more_requests_than_threads_then_stops():
+    """More concurrent requests than handler threads all get answers,
+    from at most HTTP_HANDLER_THREADS threads; after shutdown and
+    server_close no handler thread is left alive."""
+    from searchengine_spark.serve import HTTP_HANDLER_THREADS, make_http_server
+
+    service = _SlowService(0.2)
+    server = make_http_server(service, port=0)
+    port = server.server_address[1]
+    loop = threading.Thread(target=server.serve_forever, daemon=True)
+    loop.start()
+    n = 3 * HTTP_HANDLER_THREADS
+    start = threading.Barrier(n)
+    replies = [None] * n
+
+    def client(i):
+        start.wait(timeout=60)
+        replies[i] = _get(port, f"/search?q=r{i}")
+
+    clients = [threading.Thread(target=client, args=(i,)) for i in range(n)]
+    try:
+        for c in clients:
+            c.start()
+        for c in clients:
+            c.join(timeout=120)
+        status, m = _get(port, "/metrics")
+    finally:
+        server.shutdown()
+        server.server_close()
+    loop.join(timeout=60)
+    assert replies == [
+        (200, {"query": f"r{i}", "results": [{"doc_id": 1, "total_score": 1.0, "snippet": f"r{i}"}]})
+        for i in range(n)
+    ]
+    assert service.most_active <= len(service.threads) <= HTTP_HANDLER_THREADS
+    assert service.most_active > 1
+    assert not [t for t in service.threads if t.is_alive()]
+    assert not loop.is_alive()
+    search = m["endpoints"]["/search"]
+    assert search["requests"] == n
+    # requests beyond the pool waited in the queue for a thread
+    assert search["phase_s_sum"]["queue_wait"] >= 0.2
