@@ -13,36 +13,38 @@ and/or a terminal REPL.
 Spark builds one in-memory serving shard (ServingShard), once, from
 bm25.term_scores (each posting's BM25 contribution — the one BM25
 formula), bm25.snippet_table and the index's (word, doc_freq)
-vocabulary, pulled over Arrow into per-term (doc position, score)
-numpy arrays over one sorted doc_id array, a doc_id -> snippet dict,
-and the vocabulary ordered by word length, with each word's clamped
-letter counts and letter mask. The first request that needs the
-shard builds it, under a lock; start-up does not (see __init__).
+vocabulary, pulled over Arrow into per-term (doc_id, score) numpy
+arrays, a doc_id -> snippet dict, and the vocabulary ordered by word
+length, with each word's clamped letter counts and letter mask. The
+first request that needs the shard builds it, under a lock; start-up
+does not (see __init__).
 
 A warm /search runs no Spark job: tokenize, sum the distinct query
-terms' scores into a doc-indexed array, take the top-k by (score
-desc, doc_id asc) with a partition at the k-th score, then highlight
-each hit's snippet with the pattern bm25.highlight uses. Fuzzy mode
-first replaces each unknown term by its closest vocabulary word, as
+terms' scores per doc, take the top-k by (score desc, doc_id asc)
+with a partition at the k-th score, then highlight each hit's
+snippet with the pattern bm25.highlight uses. Fuzzy mode first
+replaces each unknown term by its closest vocabulary word, as
 phrase.correct_terms does, running Levenshtein only on the words that
 a length window, the letter masks and the bag distance leave. The
 Spark functions stay the parity reference (tests/test_serve.py).
 /similar still runs its cosine list in Spark over the cached
-embeddings. make_http_server answers from a fixed pool of handler
-threads and reports each /search phase's seconds in /metrics.
+embeddings. make_http_server answers each connection on a thread of
+its own, reusing parked threads, and reports each /search phase's
+seconds in /metrics.
 
 Measured on the perfbench search_http corpus (seed 1, 10k docs, 4-CPU
 VM): the shard holds 352,555 postings over 24,673 terms, 6.2 MB of
 arrays (5.4 MB of postings, the rest the vocabulary's letter counts
 and masks). The first request builds it in ~7-12 s, most of that
-Spark computing the three tables; the doc positions and letter masks
-add ~50 ms. Serving from the shard instead of Spark jobs took a warm
-request's p50 from one client from 0.254 s to ~2 ms. The handler
-pool, the sort-free top-k and the pre-filtered fuzzy lookup then took
-it from 2.32 to 1.64 ms (medians of ten alternating runs each), and
-four clients' replies from 374/s to 452/s. In process
-(scripts/serve_replay.py, 4,000 requests), a fuzzy request's p50
-fell from 7.4 to 1.9 ms.
+Spark computing the three tables; ordering the vocabulary and its
+letter counts and masks take ~15-25 ms of that. Serving from the
+shard instead of Spark jobs took a warm request's p50 from one client
+from 0.254 s to ~2 ms. Reused handler threads, the partition top-k
+and the pre-filtered fuzzy lookup then took it from 1.96 to 1.53 ms
+(medians of ten alternating runs, seed 1; 1.72 to 1.28 ms over five
+on seed 2); four clients' replies went from 437/s to 476/s, within
+the runs' spread. In process (scripts/serve_replay.py, 4,000
+requests), a fuzzy request's p50 fell from 6.2-6.5 to 2.2-2.5 ms.
 
 Scale shape (not built): the build hash-shards the term scores by
 doc_id into S serving processes, one shard each; the exact global
@@ -85,10 +87,21 @@ LATENCY_BUCKETS_S = (
     0.001, 0.0025, 0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0
 )
 
-# Handler threads of the HTTP server's pool (make_http_server): a warm
-# /search holds the GIL for all but its socket I/O, so a few threads
-# per CPU keep every CPU busy; a /similar waiting on Spark holds one.
-HTTP_HANDLER_THREADS = 8
+# Handler threads the HTTP server keeps parked between connections
+# (make_http_server). A connection that finds none parked starts a new
+# thread, so this bounds only the idle threads kept, never how many
+# requests are answered at once: a fixed pool of 8 let /similar
+# requests waiting on Spark hold /search in the queue. Measured with a
+# stub service (0.3 ms /search, 0.3 s /similar) on 4 CPUs: 4 /search
+# clients were answered by 7 threads over 5,046 requests; 32 /search
+# plus 8 /similar clients by 305 threads over 5,108 requests, with
+# /search's mean queue_wait 1.2 ms (25-45 ms with the fixed pool).
+HTTP_SPARE_THREADS = 8
+
+# Seconds a handler waits on its client's socket (for the request, or
+# for room to send the reply) before it drops the connection: a client
+# that stalls holds its thread no longer than this.
+HTTP_SOCKET_TIMEOUT_S = 10.0
 
 # Letter-count columns of the fuzzy pre-filter: a-z, then one for
 # every other character (merging characters keeps the bounds below).
@@ -121,8 +134,6 @@ def _letter_profile(words: list[str]) -> tuple[np.ndarray, np.ndarray]:
 def _levenshtein(a: str, b: str, limit: int) -> int:
     """Edit distance over code points, as Spark's levenshtein counts;
     any distance above ``limit`` comes back as ``limit + 1``."""
-    if abs(len(a) - len(b)) > limit:
-        return limit + 1
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
@@ -149,22 +160,17 @@ class ServingShard:
         t0 = time.perf_counter()
         ts = term_scores.toArrow()
         self.doc_id_type = term_scores.schema["doc_id"].dataType
-        # Each posting points at its doc's position in the sorted
-        # doc_ids, so top_k sums into a dense array instead of sorting.
-        self._doc_ids, pos = np.unique(
-            ts.column("doc_id").to_numpy(), return_inverse=True
-        )
         # Group the postings by term: sort by the term's dictionary
         # code, then slice. Each term's arrays are views of two arrays.
         words = ts.column("word").combine_chunks().dictionary_encode()
         codes = words.indices.to_numpy()
         order = np.argsort(codes, kind="stable")
-        self._pos = pos[order]
+        self._ids = ts.column("doc_id").to_numpy()[order]
         self._scores = ts.column("term_score").to_numpy()[order]
         ends = np.cumsum(np.bincount(codes, minlength=len(words.dictionary)))
         starts = np.concatenate(([0], ends[:-1]))
         self._postings = {
-            w: (self._pos[a:b], self._scores[a:b])
+            w: (self._ids[a:b], self._scores[a:b])
             for w, a, b in zip(
                 words.dictionary.to_pylist(), starts.tolist(), ends.tolist()
             )
@@ -190,10 +196,10 @@ class ServingShard:
     def shape(self) -> dict[str, Any]:
         nbytes = sum(
             a.nbytes
-            for a in (self._doc_ids, self._pos, self._scores, self._letters, self._masks)
+            for a in (self._ids, self._scores, self._letters, self._masks)
         )
         return {
-            "postings": len(self._pos),
+            "postings": len(self._ids),
             "terms": len(self._postings),
             "mb": round(nbytes / 2**20, 3),
             "build_s": round(self.build_s, 3),
@@ -209,26 +215,20 @@ class ServingShard:
         hit = [self._postings[t] for t in dict.fromkeys(terms) if t in self._postings]
         if not hit:
             return []
-        pos = np.concatenate([h[0] for h in hit])
-        n_docs = len(self._doc_ids)
-        sums = np.bincount(
-            pos, weights=np.concatenate([h[1] for h in hit]), minlength=n_docs
+        ids, inverse = np.unique(
+            np.concatenate([h[0] for h in hit]), return_inverse=True
         )
-        # A doc is a hit when a posting touched it, whatever its sum.
-        touched = np.zeros(n_docs, dtype=bool)
-        touched[pos] = True
-        docs = np.flatnonzero(touched)
-        scores = sums[docs]
-        if len(docs) > k:
+        sums = np.bincount(inverse, weights=np.concatenate([h[1] for h in hit]))
+        if len(ids) > k:
             # Every doc above the k-th score is in; of those tied with
             # it, the sort below keeps the smallest doc_ids.
-            kth = np.partition(scores, len(docs) - k)[len(docs) - k]
-            keep = scores >= kth
-            docs, scores = docs[keep], scores[keep]
-        # docs is ascending, so a stable sort on -score breaks ties by
+            kth = np.partition(sums, len(ids) - k)[len(ids) - k]
+            keep = sums >= kth
+            ids, sums = ids[keep], sums[keep]
+        # ids is ascending, so a stable sort on -score breaks ties by
         # doc_id
-        top = np.argsort(-scores, kind="stable")[:k]
-        return list(zip(self._doc_ids[docs[top]].tolist(), scores[top].tolist()))
+        top = np.argsort(-sums, kind="stable")[:k]
+        return list(zip(ids[top].tolist(), sums[top].tolist()))
 
     def correct(self, terms: list[str]) -> list[str]:
         """phrase.correct_terms' terms to search: each term missing
@@ -553,31 +553,43 @@ def _fuzzy_param(params: dict) -> bool:
     return (params.get("fuzzy") or ["0"])[0] in ("1", "true", "yes")
 
 
-class _PooledHTTPServer(HTTPServer):
-    """An HTTPServer that hands each accepted connection, through a
-    queue, to one of HTTP_HANDLER_THREADS threads started with it,
-    instead of starting a thread per connection. server_close() stops
-    them once the connections already queued are answered."""
+class _ThreadReusingHTTPServer(HTTPServer):
+    """An HTTPServer that answers each connection on its own thread, as
+    ThreadingHTTPServer does, but reuses threads: a thread that has
+    answered parks for the next connection, unless HTTP_SPARE_THREADS
+    are parked already, and a connection that finds no parked thread
+    starts one. server_close() stops the parked threads and waits for
+    the busy ones."""
 
-    # listen backlog; the stdlib default is 5
-    request_queue_size = HTTP_HANDLER_THREADS
+    # Listen backlog (the stdlib default is 5). With 16-32 clients the
+    # accept loop, sharing the GIL with busy handlers, let 5 overflow:
+    # /search's p99 was ~1 s (the client's SYN retry), ~50 ms with 128.
+    request_queue_size = 128
 
     def __init__(self, address: tuple[str, int], handler: type) -> None:
         super().__init__(address, handler)
+        self._lock = threading.Lock()
         self._work: queue.SimpleQueue = queue.SimpleQueue()
+        self._parked = 0  # threads bound to take one item off _work
+        self._threads: set[threading.Thread] = set()
+        self._closed = False
         self._picked = threading.local()
-        self._pool = [
-            threading.Thread(target=self._handle_loop, name=f"serve-http-{i}", daemon=True)
-            for i in range(HTTP_HANDLER_THREADS)
-        ]
-        for t in self._pool:
-            t.start()
 
     def process_request(self, request, client_address) -> None:
-        self._work.put((request, client_address, time.perf_counter()))
+        item = (request, client_address, time.perf_counter())
+        with self._lock:
+            if self._parked:
+                self._parked -= 1
+                self._work.put(item)
+                return
+            t = threading.Thread(
+                target=self._handle_loop, args=(item,), name="serve-http", daemon=True
+            )
+            self._threads.add(t)
+        t.start()
 
-    def _handle_loop(self) -> None:
-        while (item := self._work.get()) is not None:
+    def _handle_loop(self, item) -> None:
+        while item is not None:
             request, client_address, queued = item
             self._picked.times = (queued, time.perf_counter())
             try:
@@ -586,32 +598,47 @@ class _PooledHTTPServer(HTTPServer):
                 self.handle_error(request, client_address)
             finally:
                 self.shutdown_request(request)
+            with self._lock:
+                if self._closed or self._parked >= HTTP_SPARE_THREADS:
+                    break
+                self._parked += 1
+            item = self._work.get()
+        with self._lock:
+            self._threads.discard(threading.current_thread())
 
     def pickup(self) -> tuple[float, float]:
-        """(queued, picked up): perf_counter times at which the
+        """(accepted, picked up): perf_counter times at which the
         connection this thread handles was accepted and taken."""
         return self._picked.times
 
     def server_close(self) -> None:
         super().server_close()
-        for _ in self._pool:
-            self._work.put(None)
-        for t in self._pool:
+        with self._lock:
+            self._closed = True
+            for _ in range(self._parked):
+                self._work.put(None)
+            self._parked = 0
+            threads = list(self._threads)
+        for t in threads:
             t.join()
 
 
-def make_http_server(service: SearchService, port: int = 0) -> _PooledHTTPServer:
+def make_http_server(service: SearchService, port: int = 0) -> _ThreadReusingHTTPServer:
     """GET /search?q=...&k=10 -> JSON hits; GET /similar?doc_id=... ->
     JSON neighbors; GET /metrics -> JSON counters; GET /healthz -> ok.
 
-    Connections are answered by a fixed pool of HTTP_HANDLER_THREADS
-    threads, fed from a queue by the accept loop, with a listen
-    backlog of the same size; a connection beyond that waits in the
-    queue. Replies are HTTP/1.0, closing the connection, so an idle
-    client never holds a handler thread. Returns the (not yet serving)
-    server object so callers control the serve_forever lifecycle
-    (tests run it in a thread; __main__ blocks on it); shutdown() stops
-    the accept loop, and server_close() then stops the pool.
+    Each connection is answered on a thread of its own, as with
+    ThreadingHTTPServer, so a slow client or a /similar waiting on
+    Spark never holds up another request; threads are reused, up to
+    HTTP_SPARE_THREADS of them parked between connections, instead of
+    started per connection. A client that sends nothing for
+    HTTP_SOCKET_TIMEOUT_S, before or partway through its request,
+    loses its connection. Replies are HTTP/1.0 (the
+    BaseHTTPRequestHandler default): one request per connection, then
+    close. Returns the (not yet serving) server object so callers
+    control the serve_forever lifecycle (tests run it in a thread;
+    __main__ blocks on it); shutdown() stops the accept loop, and
+    server_close() then stops the threads.
 
     /metrics sums each endpoint's seconds per phase: queue_wait
     (accepted to picked up by a handler thread), parse (request line,
@@ -655,9 +682,7 @@ def make_http_server(service: SearchService, port: int = 0) -> _PooledHTTPServer
     }
 
     class Handler(BaseHTTPRequestHandler):
-        # one request per connection (the BaseHTTPRequestHandler
-        # default, kept on purpose: see make_http_server)
-        protocol_version = "HTTP/1.0"
+        timeout = HTTP_SOCKET_TIMEOUT_S
 
         def do_GET(self) -> None:  # noqa: N802 — http.server API
             t0 = time.perf_counter()
@@ -698,7 +723,7 @@ def make_http_server(service: SearchService, port: int = 0) -> _PooledHTTPServer
         def log_message(self, *args) -> None:  # quiet test output
             pass
 
-    return _PooledHTTPServer(("127.0.0.1", port), Handler)
+    return _ThreadReusingHTTPServer(("127.0.0.1", port), Handler)
 
 
 def repl(service: SearchService) -> None:

@@ -4,6 +4,7 @@ experience (pyapp.py input -> results -> text) on the Spark engine."""
 
 import json
 import threading
+import time
 import urllib.request
 
 import pytest
@@ -584,8 +585,6 @@ class _SlowService:
         self.active = self.most_active = 0
 
     def query(self, q, k=10, *, fuzzy=False, phases=None):
-        import time
-
         with self.lock:
             self.threads.add(threading.current_thread())
             self.active += 1
@@ -599,18 +598,33 @@ class _SlowService:
         return {}
 
 
-def test_handler_pool_answers_more_requests_than_threads_then_stops():
-    """More concurrent requests than handler threads all get answers,
-    from at most HTTP_HANDLER_THREADS threads; after shutdown and
-    server_close no handler thread is left alive."""
-    from searchengine_spark.serve import HTTP_HANDLER_THREADS, make_http_server
+def _handler_threads():
+    return [t for t in threading.enumerate() if t.name.startswith("serve-http")]
 
-    service = _SlowService(0.2)
+
+def _close(server, seconds=30):
+    """shutdown() and server_close(); whether both returned in time."""
+    closer = threading.Thread(
+        target=lambda: (server.shutdown(), server.server_close()), daemon=True
+    )
+    closer.start()
+    closer.join(timeout=seconds)
+    return not closer.is_alive()
+
+
+def test_http_threads_answer_more_requests_than_spares_then_stop():
+    """More concurrent requests than parked threads all run at once, on
+    a thread each; afterwards at most HTTP_SPARE_THREADS stay parked
+    and answer the next requests; after shutdown and server_close no
+    handler thread is left alive."""
+    from searchengine_spark.serve import HTTP_SPARE_THREADS, make_http_server
+
+    service = _SlowService(0.5)
     server = make_http_server(service, port=0)
     port = server.server_address[1]
     loop = threading.Thread(target=server.serve_forever, daemon=True)
     loop.start()
-    n = 3 * HTTP_HANDLER_THREADS
+    n = 3 * HTTP_SPARE_THREADS
     start = threading.Barrier(n)
     replies = [None] * n
 
@@ -624,20 +638,67 @@ def test_handler_pool_answers_more_requests_than_threads_then_stops():
             c.start()
         for c in clients:
             c.join(timeout=120)
+        burst = set(service.threads)
+        for _ in range(100):
+            if len(_handler_threads()) <= HTTP_SPARE_THREADS:
+                break
+            time.sleep(0.05)
+        parked = len(_handler_threads())
+        service.seconds = 0
+        service.threads.clear()
+        for i in range(3):
+            assert _get(port, f"/search?q=s{i}")[0] == 200
         status, m = _get(port, "/metrics")
     finally:
-        server.shutdown()
-        server.server_close()
+        closed = _close(server)
     loop.join(timeout=60)
+    assert closed
     assert replies == [
         (200, {"query": f"r{i}", "results": [{"doc_id": 1, "total_score": 1.0, "snippet": f"r{i}"}]})
         for i in range(n)
     ]
-    assert service.most_active <= len(service.threads) <= HTTP_HANDLER_THREADS
-    assert service.most_active > 1
-    assert not [t for t in service.threads if t.is_alive()]
+    # no request waited for another to finish
+    assert service.most_active > HTTP_SPARE_THREADS
+    assert 0 < parked <= HTTP_SPARE_THREADS
+    assert service.threads <= burst  # answered by parked threads
+    assert not _handler_threads()
     assert not loop.is_alive()
     search = m["endpoints"]["/search"]
-    assert search["requests"] == n
-    # requests beyond the pool waited in the queue for a thread
-    assert search["phase_s_sum"]["queue_wait"] >= 0.2
+    assert search["requests"] == n + 3
+    assert search["phase_s_sum"]["queue_wait"] < 0.5
+
+
+def test_stalled_clients_hold_up_no_request_and_time_out(monkeypatch):
+    """Connections that send nothing, or stop inside their headers,
+    hold up no other request; each is dropped after the socket
+    timeout, so server_close returns and leaves no thread alive."""
+    import socket
+
+    import searchengine_spark.serve as serve
+
+    monkeypatch.setattr(serve, "HTTP_SOCKET_TIMEOUT_S", 1.0)
+    server = serve.make_http_server(_SlowService(0), port=0)
+    port = server.server_address[1]
+    loop = threading.Thread(target=server.serve_forever, daemon=True)
+    loop.start()
+    stalled = []
+    try:
+        for i in range(serve.HTTP_SPARE_THREADS + 2):
+            s = socket.create_connection(("127.0.0.1", port), timeout=30)
+            if i % 2:
+                s.sendall(b"GET /search?q=x HTTP/1.0\r\nHost: a\r\n")
+            stalled.append(s)
+        t0 = time.perf_counter()
+        assert _get(port, "/search?q=live")[0] == 200
+        answered_s = time.perf_counter() - t0
+    finally:
+        closed = _close(server)
+    try:
+        assert answered_s < serve.HTTP_SOCKET_TIMEOUT_S
+        assert closed
+        # the server dropped each stalled connection without a reply
+        assert [s.recv(1024) for s in stalled] == [b""] * len(stalled)
+        assert not _handler_threads()
+    finally:
+        for s in stalled:
+            s.close()
